@@ -33,7 +33,7 @@ SCALING.md).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -573,8 +573,6 @@ def connected_components(
         .withColumn("comp", F.col("node"))
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
-
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
@@ -583,7 +581,9 @@ def connected_components(
         )
         # the convergence count rides the checkpoint job itself as an
         # observe() metric (the k_core pattern): one driver action per
-        # round, and the checkpointed rows no longer carry the _chg flag
+        # round, and the checkpointed rows no longer carry the _chg flag.
+        # obs.get blocks until an action runs: the eager localCheckpoint
+        # must stay the first action on the observed frame.
         obs = Observation()
         new_labels = (
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")

@@ -342,6 +342,8 @@ def k_core(
         deg = init_deg
         stats = deg.agg(*_fix_stats()).collect()[0]
     else:
+        # obs0.get blocks until an action runs: the eager localCheckpoint
+        # must stay the first action on the observed frame
         obs0 = Observation()
         deg = (
             e.select(F.col("lo").alias("n"))
@@ -387,6 +389,8 @@ def k_core(
             )
             .select("n", F.lit(None).cast("long").alias("d"), F.lit(1).alias("l"))
         )
+        # obs.get blocks until an action runs: the eager localCheckpoint
+        # must stay the first action on the observed frame
         obs = Observation()
         deg = (
             surv.unionAll(hits)

@@ -1,14 +1,17 @@
-"""The reference's end-to-end pipeline, re-expressed as one Spark job.
+"""The reference's end-to-end pipeline, re-expressed as two Spark jobs.
 
 Parity map (SURVEY.md §3.1-§3.2):
   * ingest (§3.1, dags/pipeline_orchestrator.py:98-123): the agent-schema
     call + NiFi CSV drain collapse into ``ensure_table`` (sampled infer +
     additive DDL) followed by a distributed CSV scan appended to the raw
-    table. Boundaries #1-#5 of the reference become driver->executor task
-    scheduling inside one app.
+    table, bound to the table's columns by name. Boundaries #1-#5 of the
+    reference become driver->executor task scheduling inside one app.
   * transform (§3.2, dags/taxi_transform_dag.py:27-86): validate-raw gate
-    (A1), then filter F1 + derivations E1-E7 + full-refresh overwrite (S5).
-  * summary (dags/taxi_transform_dag.py:89-100): global A2 aggregates.
+    (A1, a one-row probe), then filter F1 + derivations E1-E7 +
+    full-refresh overwrite (S5).
+  * summary (dags/taxi_transform_dag.py:89-100): global A2 aggregates,
+    observed on the overwrite job itself, so the cleaned rows are never
+    read back.
 
 Semantics gotchas preserved exactly (SURVEY.md §2.C):
   1. Postgres EXTRACT(dow) is 0=Sunday..6 -> ``dayofweek(ts)-1``.
@@ -20,9 +23,10 @@ Semantics gotchas preserved exactly (SURVEY.md §2.C):
 
 Scale notes: the whole transform is one narrow stage (filter + per-row
 scalars — no shuffle at all), so it scales linearly with input splits;
-the summary is a partial-aggregated single-group agg (map-side combine,
-one tiny shuffle). The cleaned sink partitions by pickup month so 100 TB
-of trips lands partition-pruned for the dominant time-windowed reads.
+the summary's count and averages are per-task partial aggregates merged
+on the driver by ``observe``, with no shuffle and no second scan. The
+cleaned sink partitions by pickup month so 100 TB of trips lands
+partition-pruned for the dominant time-windowed reads.
 """
 
 from __future__ import annotations
@@ -32,7 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import ensure_table
+from ..ops.observe import observed
+from ..schema import bind_csv_columns, ensure_table
 from ..schema.evolve import EvolutionPlan
 
 #: payment_type decode (taxi_transform_dag.py:61-64). A literal CASE ladder,
@@ -63,15 +68,21 @@ def ingest_csv(
     """§3.1: evolve-then-load. Sampled inference + additive DDL, then a
     distributed CSV read appended into the (possibly just-created) table.
 
-    The append uses the table's catalog schema so files ingested before a
-    column was added stay readable (missing columns resolve as NULL) —
-    the same additive contract as the reference's ALTER TABLE policy."""
+    The CSV columns bind to the table's catalog columns by name
+    (``bind_csv_columns``): a reordered header lands in the right
+    columns, table columns the file lacks resolve as NULL — the same
+    additive contract as the reference's ALTER TABLE policy — and a file
+    whose header differs from the first file's fails the read."""
     plan = ensure_table(spark, path, table, zone=zone, location=location)
-    target_schema = spark.table(plan.qualified).schema
+    read_schema, columns = bind_csv_columns(
+        spark, path, spark.table(plan.qualified).schema
+    )
     df = (
         spark.read.option("header", "true")
-        .schema(target_schema)
+        .option("enforceSchema", "false")
+        .schema(read_schema)
         .csv(path)
+        .select(*columns)
     )
     df.write.mode("append").insertInto(plan.qualified)
     return plan
@@ -165,13 +176,18 @@ class TaxiSummary:
     avg_tip_percentage: float
 
 
+def _summary_metrics() -> dict:
+    return {
+        "total_trips": F.count(F.lit(1)),
+        "avg_distance": F.avg("trip_distance"),
+        "avg_total": F.avg("total_amount"),
+        "avg_tip_percentage": F.avg("tip_percentage"),
+    }
+
+
 def taxi_summary(cleaned: DataFrame) -> TaxiSummary:
-    row = cleaned.agg(
-        F.count(F.lit(1)).alias("total_trips"),
-        F.avg("trip_distance").alias("avg_distance"),
-        F.avg("total_amount").alias("avg_total"),
-        F.avg("tip_percentage").alias("avg_tip_percentage"),
-    ).first()
+    """A2 over an already-cleaned frame, as one aggregation job."""
+    row = cleaned.agg(*(c.alias(n) for n, c in _summary_metrics().items())).first()
     return TaxiSummary(*row)
 
 
@@ -186,17 +202,24 @@ def run_taxi_pipeline(
     raw: DataFrame,
     cleaned_path: str,
 ) -> TaxiSummary:
-    """§3.2 end to end: gate -> clean -> full-refresh write -> summary.
+    """§3.2 end to end: gate -> clean -> full-refresh write -> summary, in
+    two Spark jobs.
 
-    The overwrite matches the reference's TRUNCATE+INSERT (gotcha 5);
-    partitioning by pickup_month keeps time-window reads pruned at scale."""
-    validate_nonempty(raw, "raw taxi trips")
-    cleaned = clean_taxi_trips(raw)
-    (
-        cleaned.write.mode("overwrite")
-        .partitionBy("pickup_month")
-        .parquet(cleaned_path)
-    )
-    written = spark.read.parquet(cleaned_path)
-    validate_nonempty(written, "cleaned taxi trips")
-    return taxi_summary(written)
+    1. A one-row probe of ``raw`` raises ``No data in raw taxi trips``
+       before ``cleaned_path`` is touched — the reference's A1 gate runs
+       before its TRUNCATE.
+    2. The overwrite (the reference's TRUNCATE+INSERT, gotcha 5),
+       partitioned by pickup_month so time-window reads prune at scale.
+       The A2 count and averages ride that job as ``observe`` metrics;
+       the cleaned-empty gate and the summary read them instead of
+       scanning what was just written."""
+    # head(1) runs one task over the first split; isEmpty plans a
+    # limit-then-count job over every split
+    if not raw.select().head(1):
+        raise ValueError("No data in raw taxi trips")
+    cleaned, obs = observed(clean_taxi_trips(raw), _summary_metrics())
+    cleaned.write.mode("overwrite").partitionBy("pickup_month").parquet(cleaned_path)
+    stats = obs.get
+    if stats["total_trips"] == 0:
+        raise ValueError("No data in cleaned taxi trips")
+    return TaxiSummary(**stats)

@@ -26,7 +26,7 @@ Reference parity: no graph surface in the reference (SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .core import QuerySpec, duck_materialize, bounded_collect, rnd, t
@@ -150,8 +150,6 @@ def bfs_hops(
     being re-checkpointed — re-copied — every round.
     """
     spark = edges.sparkSession
-    from pyspark.sql import Observation
-
     from ..ops.graph import _BROADCAST_NODE_CAP
 
     sym = edges.select(
@@ -171,6 +169,8 @@ def bfs_hops(
         seen = visited.select("node")
         if n_visited <= _BROADCAST_NODE_CAP:
             seen = F.broadcast(seen)
+        # obs.get blocks until an action runs: the eager localCheckpoint
+        # must stay the first action on the observed frame
         obs = Observation()
         nxt = (
             sym.join(f, "u")

@@ -11,9 +11,10 @@ Reference contract (agent-schema/app.py):
       (:110).
   D4  execute DDL statement-by-statement, split on ';' (app.py:226-231).
 
-Everything here is driver-side metadata work: the only cluster I/O is the
-100-row sampled read in ``infer_csv_schema``. At 100 TB the catalog calls
-are identical — schema evolution never touches data files (Parquet tables
+Everything here is driver-side metadata work: the only file I/O is
+``infer_csv_schema`` reading the file head (header plus 100 rows) on the
+driver, with no Spark job. At 100 TB the catalog calls are identical —
+schema evolution never touches data files (Parquet tables
 resolve added columns as NULL on old files, the same additive semantics
 the reference gets from ``ALTER TABLE ADD COLUMN``).
 """
@@ -54,11 +55,14 @@ def existing_columns(spark: SparkSession, qualified_table: str) -> dict[str, str
     empty dict when the table (or its database) does not exist.
 
     Mirrors the reference's dialect-portable information_schema read
-    (app.py:61-73) via the Spark catalog."""
+    (app.py:61-73) via the Spark catalog. The table's resolved schema is
+    read instead of ``catalog.listColumns``, which PySpark iterates with
+    ``toLocalIterator`` — one Spark job per partition of the listing."""
     if not spark.catalog.tableExists(qualified_table):
         return {}
     return {
-        c.name.lower(): c.dataType for c in spark.catalog.listColumns(qualified_table)
+        f.name.lower(): f.dataType.simpleString()
+        for f in spark.table(qualified_table).schema.fields
     }
 
 

@@ -11,6 +11,8 @@ below are the scale-relevant ones (SURVEY.md §4, §7 stage 6):
 * Arrow enabled so any Pandas-UDF path is vectorized batch transfer.
 * Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are cluster-reproducible.
+* Driver heap sized from host memory (``default_driver_memory``), so the
+  default fits the host it runs on.
 """
 
 from __future__ import annotations
@@ -18,6 +20,25 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_MB = 24 * 1024
+_MIN_DRIVER_MB = 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: 60 % of the host's MemTotal, capped at 24g
+    and floored at 1g, leaving room for the Python side, Python workers
+    and the JVM's off-heap memory. Without a readable ``meminfo`` (a
+    non-Linux host) it is the cap."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{_MAX_DRIVER_MB}m"
+    mb = int(total_kb * 0.6) // 1024
+    return f"{max(_MIN_DRIVER_MB, min(_MAX_DRIVER_MB, mb))}m"
 
 
 def get_spark(
@@ -83,7 +104,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Every Generate in this engine explodes a COMPUTED array (HOF

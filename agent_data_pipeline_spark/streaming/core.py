@@ -31,6 +31,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import TimestampNTZType
 
+from ..schema import bind_csv_columns
+
 
 def stream_parquet(
     spark: SparkSession,
@@ -252,12 +254,25 @@ def stream_ingest_csv(
     New files become micro-batches; the checkpoint makes ingest resume
     exactly where it stopped (the reference's queue-drain semantics plus
     restart durability it never had). Drain with ``drain(query)`` for the
-    batch-style 'queue empty' completion contract."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("header", str(header).lower())
-        .csv(input_dir)
-    )
+    batch-style 'queue empty' completion contract.
+
+    With ``header`` the columns bind to ``schema`` by name
+    (``bind_csv_columns``): the landed rows carry ``schema``'s names in
+    its order, a header column unknown to ``schema`` raises here, and a
+    file whose header differs from the first file's fails the stream."""
+    reader = spark.readStream.option("header", str(header).lower())
+    if header:
+        if isinstance(schema, str):
+            schema = T.StructType.fromDDL(schema)
+        read_schema, columns = bind_csv_columns(spark, input_dir, schema)
+        stream = (
+            reader.option("enforceSchema", "false")
+            .schema(read_schema)
+            .csv(input_dir)
+            .select(*columns)
+        )
+    else:
+        stream = reader.schema(schema).csv(input_dir)
     return foreach_batch_parquet_sink(
         stream, target_path, checkpoint, partition_by=partition_by
     )

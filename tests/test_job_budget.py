@@ -1,0 +1,103 @@
+"""Spark-job budgets of the ETL entry points.
+
+Per-job fixed cost (scheduling, task launch, plan setup) dominates these
+entry points at the sizes they run at, so the number of jobs each starts
+is pinned here: schema inference and evolution are driver-side metadata
+work (no job), and the taxi pipeline is a one-row gate probe plus the
+observed write. Jobs are counted with a job group and the status tracker.
+"""
+
+from __future__ import annotations
+
+import gzip
+import uuid
+from contextlib import contextmanager
+
+import pytest
+
+from agent_data_pipeline_spark.pipelines import run_taxi_pipeline
+from agent_data_pipeline_spark.schema import ensure_table, infer_csv_schema
+
+from .test_taxi_pipeline import HEADER, ROWS
+
+
+@contextmanager
+def _jobs(spark):
+    """Yields a list that holds, on exit, the ids of the jobs started on
+    this thread inside the block."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        # the status store learns of jobs from the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def taxi_csv(tmp_path):
+    p = tmp_path / "raw" / "trips.csv.gz"
+    p.parent.mkdir()
+    with gzip.open(p, "wt") as fh:
+        fh.write(HEADER + "\n" + "\n".join(ROWS) + "\n")
+    return str(p)
+
+
+def test_schema_inference_and_evolution_run_no_job(spark, taxi_csv):
+    with _jobs(spark) as jobs:
+        schema = infer_csv_schema(spark, taxi_csv)
+    assert len(schema.fields) == 11
+    assert jobs == []
+    with _jobs(spark) as jobs:
+        ensure_table(spark, taxi_csv, "budget_trips", zone="raw")  # create
+        ensure_table(spark, taxi_csv, "budget_trips", zone="raw")  # evolve (no-op)
+    spark.sql("DROP TABLE IF EXISTS raw.budget_trips")
+    assert jobs == []
+
+
+def _raw(spark, tmp_path, rows):
+    """A parquet raw table of ``rows`` in three files, typed as the full
+    fixture infers."""
+    tmp_path.mkdir(exist_ok=True)
+    full, src = tmp_path / "full.csv", tmp_path / "src.csv"
+    full.write_text(HEADER + "\n" + "\n".join(ROWS) + "\n")
+    src.write_text(HEADER + "\n" + "".join(r + "\n" for r in rows))
+    raw = str(tmp_path / "raw_parquet")
+    spark.read.option("header", "true").schema(infer_csv_schema(spark, str(full))).csv(
+        str(src)
+    ).repartition(3).write.mode("overwrite").parquet(raw)
+    return spark.read.parquet(raw)
+
+
+def test_taxi_pipeline_runs_at_most_two_jobs(spark, tmp_path):
+    raw = _raw(spark, tmp_path, ROWS)
+    with _jobs(spark) as jobs:
+        summary = run_taxi_pipeline(spark, raw, str(tmp_path / "cleaned"))
+    assert summary.total_trips == 5
+    assert len(jobs) <= 2, jobs
+
+
+def test_empty_raw_raises_before_cleaned_path_is_touched(spark, tmp_path):
+    """The reference gates the raw table before its TRUNCATE: an empty
+    input must raise and leave the previous cleaned output in place."""
+    cleaned = str(tmp_path / "cleaned")
+    run_taxi_pipeline(spark, _raw(spark, tmp_path, ROWS), cleaned)
+    before = spark.read.parquet(cleaned).count()
+
+    empty = _raw(spark, tmp_path / "empty", [])
+    with pytest.raises(ValueError, match="No data in raw taxi trips"):
+        run_taxi_pipeline(spark, empty, cleaned)
+    assert spark.read.parquet(cleaned).count() == before == 5
+
+
+def test_cleaned_empty_gate_reads_the_write_metrics(spark, tmp_path):
+    """Rows that all fail the F1 filter: the write still truncates (the
+    reference's TRUNCATE+INSERT), then the observed count raises."""
+    filtered_only = [r for r in ROWS if "109,110" in r or "111,112" in r]
+    with pytest.raises(ValueError, match="No data in cleaned taxi trips"):
+        run_taxi_pipeline(spark, _raw(spark, tmp_path, filtered_only), str(tmp_path / "c"))

@@ -377,3 +377,218 @@ def test_warehouse_ddl_executes_on_derby(spark, tmp_path):
 
     # idempotent re-run: CREATE SCHEMA/TABLE already exist -> tolerated
     assert run_jdbc_ddl(spark, url, stmts, driver=drv) == len(stmts)
+
+
+# --- Driver-side inference pinned to Spark's CSV inference -------------------
+
+
+def _spark_inferred(spark, path, sample_rows=100):
+    """The Spark-job inference ``infer_csv_schema`` replaced: read the head
+    as text, then Spark's own CSV inference over those lines."""
+    from agent_data_pipeline_spark.schema import sanitize_schema
+
+    head = [r.value for r in spark.read.text(path).limit(sample_rows + 1).collect()]
+    return sanitize_schema(
+        spark.read.option("header", "true")
+        .option("inferSchema", "true")
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+        .csv(spark.sparkContext.parallelize(head, 1))
+        .schema
+    )
+
+
+# The perfbench taxi header (perfbench/gen.py TAXI_V2) with cells shaped
+# like the generator's: second-resolution timestamps, two-decimal money,
+# integer codes and an empty fee cell inside the sample.
+TAXI_CSV = (
+    "tpep_pickup_datetime,tpep_dropoff_datetime,passenger_count,trip_distance,"
+    "payment_type,fare_amount,tip_amount,total_amount,PULocationID,DOLocationID,"
+    "cbd_congestion_fee,Airport Fee\n"
+    "2025-01-03 10:00:00,2025-01-03 10:10:00,1,1.00,1,5.00,0.00,6.00,12,200,0.75,0.00\n"
+    "2025-01-04 22:15:09,2025-01-04 22:19:09,0,2.35,2,9.00,0.00,10.75,265,1,,1.75\n"
+    "2025-01-31 23:59:59,2025-02-01 00:30:01,6,20.00,4,60.00,10.00,71.00,7,7,0.00,0.00\n"
+)
+
+# Every planted edge cell Spark's inference treats specially, one column
+# each, two rows per column.
+EDGE_CSV = (
+    "empty_mid,all_empty,quoted_comma,quoted_num,plus,nan,padded,padded_dec,"
+    "date_only,date_and_ts,int_and_dec,bool_mixed_case,suffix_d,hex_float,huge_int,"
+    "ts_bad_second\n"
+    '1,,"a, b","1,000",+5,NaN, 12,7.5 ,2025-01-01,2025-01-01,1,TRUE,1.5d,0x1p3,'
+    "99999999999999999999999,2025-01-01 08:00:60\n"
+    ',,"c, d","2,000",+6,1.5,13 , 8.25,2025-12-31,2025-01-01 08:00:00,2.5,false,2,-0x.8P1,'
+    "1,2025-01-01 08:00:00\n"
+)
+
+
+def _write(tmp_path, name, text):
+    p = tmp_path / name
+    if name.endswith(".gz"):
+        import gzip
+
+        with gzip.open(p, "wt") as fh:
+            fh.write(text)
+    else:
+        p.write_text(text)
+    return str(p)
+
+
+@pytest.mark.parametrize(
+    "name,text",
+    [
+        ("v1.csv", CSV_V1),
+        ("v2.csv", CSV_V2),
+        ("taxi.csv", TAXI_CSV),
+        ("edges.csv", EDGE_CSV),
+        ("edges.csv.gz", EDGE_CSV),
+        ("header_quirks.csv", "a,A,,b c,b-c\n1,x,2025-01-01 00:00:00,true,\n"),
+    ],
+)
+def test_driver_inference_matches_spark_inference(spark, tmp_path, name, text):
+    """``infer_csv_schema`` reads the head on the driver and types cells in
+    Python; it must land on the schema Spark's CSV inference gave, field
+    for field (names, order, 5-type vocabulary). The deliberate
+    divergences are listed in ``test_driver_inference_divergences``."""
+    path = _write(tmp_path, name, text)
+    assert infer_csv_schema(spark, path) == _spark_inferred(spark, path)
+
+
+def test_driver_inference_edge_types(spark, tmp_path):
+    """What the planted edge cells type as (and so what the parity test
+    above pins both engines to)."""
+    got = {
+        f.name: f.dataType.simpleString()
+        for f in infer_csv_schema(spark, _write(tmp_path, "e.csv", EDGE_CSV)).fields
+    }
+    assert got == {
+        "empty_mid": "bigint",  # an empty cell is NULL, not a type
+        "all_empty": "string",
+        "quoted_comma": "string",
+        "quoted_num": "string",  # "1,000" is not a number to Spark
+        "plus": "bigint",
+        "nan": "double",
+        "padded": "double",  # Java's double parser trims, its long parser does not
+        "padded_dec": "double",
+        "date_only": "timestamp",  # DATE collapses to TIMESTAMP
+        "date_and_ts": "string",
+        "int_and_dec": "double",
+        "bool_mixed_case": "boolean",
+        "suffix_d": "double",  # Double.parseDouble takes a d/f suffix
+        "hex_float": "double",  # ... and hex floats
+        "huge_int": "double",  # past 64 bits: decimal -> DOUBLE
+        "ts_bad_second": "string",
+    }
+
+
+def test_driver_inference_divergences(spark, tmp_path):
+    """Deliberate divergences from the Spark-job inference:
+
+    1. The sample is ``sample_rows`` NON-BLANK data rows. The old text
+       read took ``sample_rows + 1`` physical lines, so blank lines in the
+       head shrank its sample; the reference's ``pd.read_csv(nrows=100)``
+       skips blank lines too.
+    2. A quoted field spanning lines is one record to Python's ``csv``
+       module; the old inference parsed every line on its own.
+    Case 1 is planted: a blank line pushes row 100 out of the old window."""
+    lines = ["v", ""] + [str(i) for i in range(99)] + ["not-a-number"]
+    path = _write(tmp_path, "blank.csv", "\n".join(lines) + "\n")
+    assert _spark_inferred(spark, path).fields[0].dataType == T.LongType()
+    assert infer_csv_schema(spark, path).fields[0].dataType == T.StringType()
+
+
+def test_read_csv_head_resolves_directories_globs_and_codecs(spark, tmp_path):
+    """Every path ``spark.read.text`` took still works: a directory or
+    glob resolves to its first visible file in name order (hidden ``_`` /
+    ``.`` files skipped, subdirectories searched), and compressed files
+    are decoded by their extension."""
+    from agent_data_pipeline_spark.schema import read_csv_head
+
+    d = tmp_path / "drop"
+    (d / "sub").mkdir(parents=True)
+    (d / "_SUCCESS").write_text("")
+    (d / ".b.csv.crc").write_text("junk")
+    (d / "b.csv").write_text("b_col\n2\n")
+    (d / "c.csv").write_text("c_col\n3\n")
+    (d / "sub" / "a.csv").write_text("sub_col\n1\n")
+    _write(d, "a.csv.gz", "a_col,x\n1,2\n3,4\n")
+
+    assert read_csv_head(spark, str(d), 5) == (["a_col", "x"], [["1", "2"], ["3", "4"]])
+    assert read_csv_head(spark, str(d / "[bc].csv")) == (["b_col"], [])
+    assert read_csv_head(spark, str(d / "sub")) == (["sub_col"], [])
+    (d / "empty.csv").write_text("")
+    assert read_csv_head(spark, str(d / "empty.csv")) == ([], [])
+    with pytest.raises(FileNotFoundError):
+        read_csv_head(spark, str(tmp_path / "missing" / "*.csv"))
+
+
+# --- By-name ingest (reordered and widened headers) --------------------------
+
+BASE_CSV = "trip_id,fare,tip\n1,10.0,2.0\n2,20.0,3.0\n"
+
+
+def _ingested(spark, tmp_path, table, *files):
+    from agent_data_pipeline_spark.pipelines import ingest_csv
+
+    raw = tmp_path / "raw"
+    raw.mkdir(exist_ok=True)
+    for name, text in files:
+        (raw / name).write_text(text)
+        plan = ingest_csv(spark, str(raw / name), table, zone="raw")
+    rows = spark.table(plan.qualified).collect()
+    spark.sql(f"DROP TABLE IF EXISTS {plan.qualified}")
+    return {r["trip_id"]: r.asDict() for r in rows}
+
+
+def test_ingest_binds_reordered_header_by_name(spark, tmp_path):
+    """A file whose header lists the table's columns in another order
+    lands each value in its named column; positional binding put
+    trip_id=NULL, fare=<tip> here."""
+    got = _ingested(
+        spark, tmp_path, "byname_reorder",
+        ("a.csv", BASE_CSV),
+        ("b.csv", "tip,trip_id,fare\n0.5,3,30.0\n"),
+    )
+    assert got[3] == {"trip_id": 3, "fare": 30.0, "tip": 0.5}
+    assert got[1] == {"trip_id": 1, "fare": 10.0, "tip": 2.0}
+
+
+def test_ingest_binds_middle_insert_by_name(spark, tmp_path):
+    """A new column inserted mid-header is appended to the table by
+    evolution; its values must land in it, and the columns after it must
+    not shift. Rows from the older file read the new column as NULL."""
+    got = _ingested(
+        spark, tmp_path, "byname_insert",
+        ("a.csv", BASE_CSV),
+        ("b.csv", "trip_id,Extra Fee,fare,tip\n3,1.75,30.0,0.5\n"),
+    )
+    assert got[3] == {"trip_id": 3, "fare": 30.0, "tip": 0.5, "Extra_Fee": 1.75}
+    assert got[1]["Extra_Fee"] is None and got[1]["fare"] == 10.0
+
+
+def test_bind_csv_columns_rejects_unknown_and_ambiguous_headers(spark, tmp_path):
+    from agent_data_pipeline_spark.schema import bind_csv_columns
+
+    table = T.StructType.fromDDL("trip_id long, fare double, Airport_Fee double")
+    ok = tmp_path / "ok.csv"
+    ok.write_text("Airport Fee,TRIP_ID\n1.75,1\n")
+    read, cols = bind_csv_columns(spark, str(ok), table)
+    assert read.simpleString() == "struct<Airport Fee:double,TRIP_ID:bigint>"
+    landed = (
+        spark.read.option("header", "true")
+        .option("enforceSchema", "false")
+        .schema(read)
+        .csv(str(ok))
+        .select(*cols)
+    )
+    assert landed.schema.fieldNames() == ["trip_id", "fare", "Airport_Fee"]
+    assert [tuple(r) for r in landed.collect()] == [(1, None, 1.75)]
+
+    unknown = tmp_path / "unknown.csv"
+    unknown.write_text("trip_id,surprise\n1,2\n")
+    with pytest.raises(ValueError, match="surprise"):
+        bind_csv_columns(spark, str(unknown), table)
+    twice = tmp_path / "twice.csv"
+    twice.write_text("trip_id,Airport Fee,airport-fee\n1,2,3\n")
+    with pytest.raises(ValueError, match="airport_fee"):
+        bind_csv_columns(spark, str(twice), table)

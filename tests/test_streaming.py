@@ -209,6 +209,64 @@ def test_stream_ingest_csv_incremental(spark, tmp_path):
     assert sorted(r["id"] for r in landed.collect()) == [1, 2, 3]
 
 
+# The table an evolved ingest would hold: Extra_Fee was appended last.
+_TRIPS_DDL = "trip_id long, fare double, tip double, Extra_Fee double"
+
+
+def _stream_landed(spark, tmp_path, first_csv, *later_csvs):
+    from agent_data_pipeline_spark.streaming import stream_ingest_csv
+
+    watch, target = tmp_path / "incoming", tmp_path / "landed"
+    watch.mkdir()
+    (watch / "f0.csv").write_text(first_csv)
+    q = stream_ingest_csv(spark, str(watch), str(target), str(tmp_path / "ckpt"), _TRIPS_DDL)
+    try:
+        q.processAllAvailable()
+        for i, text in enumerate(later_csvs, 1):
+            (watch / f"f{i}.csv").write_text(text)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(60)
+    landed = spark.read.parquet(str(target))
+    assert landed.columns == ["trip_id", "fare", "tip", "Extra_Fee"]
+    return {r["trip_id"]: tuple(r) for r in landed.collect()}
+
+
+def test_stream_ingest_csv_binds_reordered_header_by_name(spark, tmp_path):
+    """Header ``tip,Extra Fee,trip_id,fare`` landed as trip_id=NULL,
+    fare=0.5 when the schema bound by position."""
+    got = _stream_landed(spark, tmp_path, "tip,Extra Fee,trip_id,fare\n0.5,30.0,7,12.0\n")
+    assert got == {7: (7, 12.0, 0.5, 30.0)}
+
+
+def test_stream_ingest_csv_binds_middle_insert_by_name(spark, tmp_path):
+    """A file with a column inserted mid-header (the table has it last)
+    lands by name; the table column it lacks is NULL."""
+    got = _stream_landed(spark, tmp_path, "trip_id,Extra Fee,fare\n7,1.75,12.0\n")
+    assert got == {7: (7, 12.0, None, 1.75)}
+
+
+def test_stream_ingest_csv_refuses_unbindable_headers(spark, tmp_path):
+    """Loud, not shifted: a header column the table lacks raises before
+    the stream starts, and a later file whose header differs from the
+    first file's fails the stream instead of landing shifted columns."""
+    from pyspark.errors import StreamingQueryException
+
+    from agent_data_pipeline_spark.streaming import stream_ingest_csv
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "f0.csv").write_text("trip_id,surprise\n1,2\n")
+    with pytest.raises(ValueError, match="surprise"):
+        stream_ingest_csv(spark, str(bad), str(tmp_path / "o"), str(tmp_path / "c"), _TRIPS_DDL)
+
+    with pytest.raises(StreamingQueryException, match="(?i)header"):
+        _stream_landed(
+            spark, tmp_path, "trip_id,fare,tip\n1,10.0,2.0\n", "fare,trip_id,tip\n30.0,3,0.5\n"
+        )
+
+
 def test_stateful_running_agg_accumulates(spark, events_batch, tmp_path):
     """applyInPandasWithState running per-key agg: replay the source one
     file per micro-batch; state must accumulate ACROSS batches (keys seen
