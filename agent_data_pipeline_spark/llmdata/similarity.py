@@ -1,6 +1,6 @@
 """Embedding similarity search over an ``array<float>`` column.
 
-Three tiers, in increasing scale:
+Four tiers, in increasing scale:
 
 * ``cosine_topk_bruteforce`` — exact top-k for a (driver-small) query set
   against the full corpus. The query matrix ships inside an Arrow-batched
@@ -20,6 +20,15 @@ Three tiers, in increasing scale:
   Signatures are one numpy matmul per Arrow batch (vectorized Pandas UDF),
   not per-plane Catalyst expressions — 64 plane-dots as literal expression
   trees evaluate interpreted and dominate runtime.
+* ``ivf_topk`` — k-means cells + multi-probe search. Cell assignment
+  (an argmin over a few dozen centres) and the per-pair cosine re-rank
+  are short enough for JVM array expressions, so the search starts no
+  Python worker; ``semantic_dedup`` assigns cells with the same
+  expression.
+
+Pandas UDFs stay where built-in expressions cannot do the work: one
+matmul per Arrow batch or per group (SRP signatures, brute-force top-k,
+the within-cell pair matrix of ``semantic_dedup``).
 
 Hyperplanes are derived deterministically from a splitmix64-style mix of
 (table, bit, dim) — no RNG state, reproducible across runs and engines.
@@ -27,13 +36,15 @@ Hyperplanes are derived deterministically from a splitmix64-style mix of
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..fns import bounded_collect, rnd
+from ..fns import bounded_collect, once, rnd
 
 # ANN/decontamination contract: the query/eval side is the SMALL side,
 # shipped to executors inside the kernel closure — the corpus side is
@@ -366,6 +377,41 @@ def _train_sample(corpus: DataFrame, id_col: str, vec_col: str, train_limit: int
     return np.stack([np.asarray(r[1], dtype=np.float64) for r in sample])
 
 
+def _centroids(centers: np.ndarray):
+    """The fitted centres as one literal array of (j, c, n) structs:
+    index, coordinates and squared norm. It is handed over as one JSON
+    string that the optimizer folds into a literal, so its size costs
+    the driver nothing: spelled out as SQL ``array(named_struct(...))``
+    the 128-cell literal took ~1 s to analyze, and a ``F.lit`` per
+    element one py4j call each. ``json.dumps`` writes each double in its
+    shortest round-trip form, so the values arrive exact."""
+    sq = (centers**2).sum(axis=1)
+    cells = [
+        {"j": j, "c": [float(x) for x in c], "n": float(n)}
+        for j, (c, n) in enumerate(zip(centers, sq))
+    ]
+    return F.from_json(F.lit(json.dumps(cells)), "array<struct<j:int,c:array<double>,n:double>>")
+
+
+def _assign_cells(df: DataFrame, vec_col: str, centers: np.ndarray) -> DataFrame:
+    """Adds ``cell``, the index of the nearest centre, as a JVM array
+    expression: ``‖v − c‖² = ‖v‖² − 2 v·c + ‖c‖²`` with the per-row
+    ``‖v‖²`` dropped, then ``array_min`` over (distance, j) structs, which
+    breaks ties to the lowest j like numpy's ``argmin``. Also adds ``_v``,
+    the vector cast to double once; ``once`` keeps Catalyst from inlining
+    the cast into the lambda (redone per centre) when a caller drops
+    ``_v``, and keeps the join's inferred ``isnotnull(cell)`` filter from
+    evaluating the argmin a second time."""
+    df = df.withColumn("_v", once(F.transform(F.col(vec_col), lambda x: x.cast("double"))))
+    dist = F.transform(
+        _centroids(centers),
+        lambda e: F.struct(
+            (F.lit(-2.0) * _dot(F.col("_v"), e["c"]) + e["n"]).alias("d"), e["j"].alias("j")
+        ),
+    )
+    return df.withColumn("cell", once(F.array_min(dist)["j"]))
+
+
 def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.92,
@@ -398,22 +444,15 @@ def semantic_dedup(
 
     Centroids come from a seeded fit on a bounded, layout-independent
     sample (lowest ``train_limit`` ids — see ``_train_sample``);
-    assignment is one vectorized Arrow pass.
+    assignment is the JVM expression ``ivf_topk`` uses (``_assign_cells``).
 
     Returns (id, cell, is_dup) for every corpus vector.
     """
     smat = _train_sample(corpus, id_col, vec_col, train_limit)
     centers = _kmeans_fit(smat, n_cells, seed=42, iters=10)
-
-    @F.pandas_udf("int")
-    def nearest_cell(vecs: pd.Series) -> pd.Series:
-        vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        d = -2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    assigned = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).withColumn("cell", nearest_cell("vec"))
+    assigned = _assign_cells(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "vec", centers
+    ).drop("_v")
 
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
     cells = (
@@ -555,12 +594,22 @@ def ivf_topk(
          corpus size (the centroids need sample-representativeness, not
          the full corpus); driver-side numpy Lloyd iterations avoid ~10
          tiny Spark jobs of ML-pipeline overhead per fit,
-      2. assign every corpus vector to its nearest centroid with a
-         vectorized Pandas UDF (centroids ship in the closure — tiny),
+      2. assign every corpus vector to its nearest centroid with a JVM
+         array expression (``_assign_cells``; the centroids are one
+         folded literal),
       3. for each (driver-small) query pick the ``n_probe`` nearest
-         cells, broadcast the (query, cell) probe list, equi-join on
-         cell — shuffle keys are cell ids, never a cross join,
-      4. exact cosine re-rank inside the candidate set.
+         cells on the driver, broadcast the (query, cell) probe list,
+         equi-join on cell — shuffle keys are cell ids, never a cross
+         join,
+      4. exact cosine re-rank inside the candidate set:
+         ``rnd(q·c / (‖q‖·‖c‖), 6)`` with a zero norm counted as 1,
+         the query norms computed on the driver and ``‖c‖`` once per
+         corpus row.
+
+    No step runs Python on the executors: the probe list enters the JVM
+    as a pandas frame over Arrow. The rows equal those of the pandas-UDF
+    kernel this replaced (tests/test_similarity.py keeps it as the
+    reference).
 
     Deterministic: seeded k-means++ init, fixed 10 Lloyd iterations.
     Approximate => rows-only driver check; recall@k floor asserted in
@@ -569,47 +618,45 @@ def ivf_topk(
     smat = _train_sample(corpus, id_col, vec_col, train_limit)
     centers = _kmeans_fit(smat, n_cells, seed=42, iters=10)
 
-    @F.pandas_udf("int")
-    def nearest_cell(vecs: pd.Series) -> pd.Series:
-        vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        # ||v - c||^2 = ||v||^2 - 2 v.c + ||c||^2; ||v||^2 constant per row
-        d = -2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    # Deliberately NOT spread(): the assign UDF + broadcast probe join +
-    # re-rank fuse into the scan stage, and at 32 cells the serial cost
-    # of that stage on a one-split fixture is smaller than a forced
+    # Deliberately NOT spread(): the assign expression + broadcast probe
+    # join + re-rank fuse into the scan stage, and at 32 cells the serial
+    # cost of that stage on a one-split fixture is smaller than a forced
     # exchange (interleaved A/B: 1.43 s vs 1.52 s min-of-6). Any corpus
     # big enough for the serial stage to matter arrives multi-split and
     # parallelizes without the exchange.
-    corpus_cells = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("cell", nearest_cell("c_vec"))
+    corpus_cells = _assign_cells(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)), vec_col, centers
+    ).select("neighbor_id", "cell", "_v", _norm(F.col("_v")).alias("c_nrm"))
 
     qrows = bounded_collect(
         queries.select(id_col, vec_col),
         MAX_QUERY_SIDE_ROWS,
         "ANN query side is the bounded broadcast side",
     )
-    spark = corpus.sparkSession
     probe_rows = []
     for r in qrows:
         qv = np.asarray(r[1], dtype=np.float64)
+        qn = float(np.linalg.norm(qv[None, :], axis=1)[0]) or 1.0
         d = ((centers - qv) ** 2).sum(axis=1)
         for cell in np.argsort(d)[:n_probe]:
-            probe_rows.append((int(r[0]), list(map(float, r[1])), int(cell)))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, q_vec array<float>, cell int"
+            probe_rows.append((int(r[0]), qv.tolist(), qn, int(cell)))
+    # a pandas frame takes the Arrow path into the JVM; a list of tuples
+    # would go through a Python RDD and start Python workers to scan it
+    probes = corpus.sparkSession.createDataFrame(
+        pd.DataFrame(probe_rows, columns=["query_id", "q_vec", "q_nrm", "cell"]),
+        "query_id long, q_vec array<double>, q_nrm double, cell int",
     )
 
-    pair_dot = _pair_dot_udf()
+    c_nrm = F.when(F.col("c_nrm") == 0.0, F.lit(1.0)).otherwise(F.col("c_nrm"))
     sims = (
         corpus_cells.join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
-            pair_dot(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim"),
+            rnd(_dot(F.col("q_vec"), F.col("_v")) / (F.col("q_nrm") * c_nrm), _ROUND).alias(
+                "cosine_sim"
+            ),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))

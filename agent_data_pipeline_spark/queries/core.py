@@ -25,6 +25,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fns import (  # noqa: F401  (re-exported for query modules)
     assert_grid_headroom,
@@ -32,6 +33,7 @@ from ..fns import (  # noqa: F401  (re-exported for query modules)
     once,
     rnd,
 )
+from ..io.sources import parquet_schema
 
 
 @dataclass(frozen=True)
@@ -74,14 +76,16 @@ def duck_materialize(sql: str) -> str:
 
 
 # Schema catalog (round 14, guide §7.3 driver-side cost): a bare
-# ``spark.read.parquet(path)`` re-infers the schema from file footers on
+# ``spark.read.parquet(path)`` infers the schema from a file footer on
 # EVERY call — measured 70-264 ms per call at sf0.1 vs 14-22 ms with the
 # schema supplied, and the bench's 50 queries construct ~130 table reads
 # per pass. A production engine reads table schemas from a catalog, not
 # from footers per query; this is that catalog: METADATA only (a
 # StructType keyed on path + mtime + size — never data, never plans, and
 # a rewritten fixture invalidates the key), so every query still scans
-# and computes from the parquet inputs.
+# and computes from the parquet inputs. A miss reads one footer on the
+# driver (``io.sources.parquet_schema``), so filling it runs no Spark job;
+# a hit skips even that footer read.
 _SCHEMA_CACHE: dict = {}
 _EVENTS_READ_CACHE: dict = {}
 
@@ -96,62 +100,67 @@ def _schema_key(path: str):
     return (path, st.st_mtime_ns, st.st_size)
 
 
+def table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The parquet schema at ``path``, from the schema catalog."""
+    key = _schema_key(path)
+    schema = _SCHEMA_CACHE.get(key) if key is not None else None
+    if schema is None:
+        schema = parquet_schema(spark, path) or spark.read.parquet(path).schema
+        if key is not None:
+            _SCHEMA_CACHE[key] = schema
+    return schema
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, f"{sf_dir}/{name}.parquet")
     path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(table_schema(spark, path)).parquet(path)
+
+
+def events_schema(spark: SparkSession, path: str) -> tuple[T.StructType, bool]:
+    """``(schema, ts_is_long)`` of the events parquet at ``path``, from the
+    schema catalog. The footer is converted with TIMESTAMP(NANOS) mapped
+    to ``long`` (on a copy of the session conf), so a nanos ``ts`` reads
+    as raw epoch nanos; ``ts_is_long`` says the caller must rebuild the
+    timestamp from them."""
     key = _schema_key(path)
-    if key is None:
-        return spark.read.parquet(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    cached = _EVENTS_READ_CACHE.get(key) if key is not None else None
+    if cached is None:
+        schema = parquet_schema(spark, path, nanos_as_long=True)
+        if schema is None:
+            schema = spark.read.parquet(path).schema
+        ts = next((f.dataType for f in schema.fields if f.name == "ts"), None)
+        cached = (schema, isinstance(ts, T.LongType))
+        if key is not None:
+            _EVENTS_READ_CACHE[key] = cached
+    return cached
+
+
+def with_nanos_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Rebuilds ``ts`` from epoch nanos as a microsecond timestamp whose
+    session-TZ rendering is the UTC wall clock the nanos record (see
+    ``read_events``)."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    return df.withColumn(
+        "ts", F.to_utc_timestamp(F.timestamp_micros(F.expr("ts div 1000")), tz)
+    )
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
     """The events fixture stores ``ts`` as parquet TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects (PARQUET_TYPE_ILLEGAL). Fall back to
-    the legacy nanos-as-long read and rebuild a microsecond timestamp with
-    integer arithmetic (``div 1000`` — going through double would lose
-    sub-microsecond bits at 2024-epoch magnitudes).
+    Spark's readers reject (PARQUET_TYPE_ILLEGAL) unless the column is
+    read as ``long``. ``events_schema`` reads the footer on the driver and
+    gives ``ts`` as ``long``; a read with that schema needs no legacy conf
+    (vectorized reader on or off). The microsecond timestamp is rebuilt
+    with integer arithmetic (``div 1000`` — going through double would
+    lose sub-microsecond bits at 2024-epoch magnitudes).
 
     ``to_utc_timestamp(_, session_tz)`` pins wall-clock semantics: the
     nanos are a UTC wall-clock reading, and other readers (DuckDB) treat
     them as naive — the shift makes the session-TZ rendering of ``ts``
     equal that UTC wall clock, so a driver session in a non-UTC timezone
     sees the same values (and window grids) as the oracle."""
-
-    def _fix_ts(df: DataFrame) -> DataFrame:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        micros = F.timestamp_micros(F.expr("ts div 1000"))
-        return df.withColumn("ts", F.to_utc_timestamp(micros, tz))
-
-    # same schema-catalog treatment as t(): remember (schema, needs the
-    # nanos fix, needs the legacy conf) per (path, mtime, size) so the
-    # probe-read + exception dance and the footer inference run once per
-    # fixture, not once per query construction. The legacy conf is
-    # re-set per call (idempotent, per-session) because the cache can
-    # outlive the session that populated it.
-    key = _schema_key(path)
-    cached = _EVENTS_READ_CACHE.get(key) if key is not None else None
-    if cached is not None:
-        schema, fix, legacy = cached
-        if legacy:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(schema).parquet(path)
-        return _fix_ts(df) if fix else df
-
-    try:
-        df = spark.read.parquet(path)
-        fix = dict(df.dtypes).get("ts") == "bigint"
-        legacy = False
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        fix, legacy = True, True
-    if key is not None:
-        _EVENTS_READ_CACHE[key] = (df.schema, fix, legacy)
-    return _fix_ts(df) if fix else df
+    schema, ts_is_long = events_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    return with_nanos_ts(spark, df) if ts_is_long else df

@@ -14,7 +14,7 @@ from pyspark.sql.window import Window as W
 
 from ..ops.asof import asof_join
 from ..ops.sessionize import session_summary
-from .core import QuerySpec, read_events, rnd, t
+from .core import QuerySpec, events_schema, rnd, t, table_schema, with_nanos_ts
 
 
 def _tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,45 +159,26 @@ FROM purchases p ASOF LEFT JOIN clicks c
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture. The fixture stores ts as
-    TIMESTAMP(NANOS): batch-probe how to read it (read_events handles
-    both nanos-as-long and native layouts). FileStreamSource requires a
-    directory: when events.parquet is a single file (the driver
-    fixtures), stream the sf dir with a glob filter selecting it; when
-    it is itself a directory of part files (standard Spark table
-    layout), stream it directly — pathGlobFilter matches leaf file
-    names, so the single-file glob would silently match nothing."""
+    """readStream over the events fixture, with the schema and nanos
+    handling of the batch read (``core.events_schema``: the footer read
+    on the driver, a TIMESTAMP(NANOS) ``ts`` read as long and rebuilt).
+    FileStreamSource requires a directory: when events.parquet is a
+    single file (the driver fixtures), stream the sf dir with a glob
+    filter selecting it; when it is itself a directory of part files
+    (standard Spark table layout), stream it directly — pathGlobFilter
+    matches leaf file names, so the single-file glob would silently
+    match nothing."""
     import os
 
     path = f"{sf_dir}/events.parquet"
-    batch = read_events(spark, path)
+    schema, ts_is_long = events_schema(spark, path)
     if os.path.isdir(path):
         stream_dir, reader = path, spark.readStream
     else:
         stream_dir = sf_dir
         reader = spark.readStream.option("pathGlobFilter", "events.parquet")
-    # "raw ts surfaces as bigint" is exactly the `fix` bit the events
-    # schema catalog already probed (queries/core.read_events) — reuse
-    # it instead of paying another footer-inference read per stream
-    # construction.
-    from .core import _EVENTS_READ_CACHE, _schema_key
-
-    cached = _EVENTS_READ_CACHE.get(_schema_key(path))
-    raw_ts_long = (
-        cached[1]
-        if cached is not None
-        else dict(spark.read.parquet(path).dtypes).get("ts") == "bigint"
-    )
-    if raw_ts_long:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        raw = reader.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(stream_dir)
-        return raw.withColumn(
-            "ts", F.to_utc_timestamp(F.timestamp_micros(F.expr("ts div 1000")), tz)
-        )
-    return reader.schema(batch.schema).parquet(stream_dir)
+    stream = reader.schema(schema).parquet(stream_dir)
+    return with_nanos_ts(spark, stream) if ts_is_long else stream
 
 
 def _stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +396,7 @@ def _stream_docs_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import drain, stream_to_memory
 
     path = f"{sf_dir}/documents.parquet"
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = table_schema(spark, path)
     if os.path.isdir(path):
         reader, stream_dir = spark.readStream, path
     else:

@@ -29,6 +29,8 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io.sources import first_data_file
+
 #: The reference's complete type vocabulary (agent-schema/app.py:33-44),
 #: keyed by the Spark type we land on.
 FIVE_TYPE_VOCABULARY = (
@@ -83,39 +85,15 @@ _CHUNK = 1 << 16
 _JAVA_BLANK = "".join(map(chr, range(33)))
 
 
-def _hidden(name: str) -> bool:
-    # the names Spark's file listing skips inside a directory
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
-def _first_file(fs, status):
-    """Depth-first, name-ordered search for the first visible data file."""
-    if status.isFile():
-        return status.getPath()
-    children = [c for c in fs.listStatus(status.getPath()) if not _hidden(c.getPath().getName())]
-    for child in sorted(children, key=lambda c: c.getPath().getName()):
-        found = _first_file(fs, child)
-        if found is not None:
-            return found
-    return None
-
-
 def _head_lines(spark: SparkSession, path: str, n: int) -> list[str]:
     """The first ``n`` non-blank lines of the first file under ``path``
     (a file, directory or glob), read on the driver."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    pattern = jvm.org.apache.hadoop.fs.Path(path)
-    fs = pattern.getFileSystem(conf)
-    matches = sorted(fs.globStatus(pattern) or [], key=lambda s: s.getPath().toString())
-    found = (_first_file(fs, s) for s in matches)
-    file = next((f for f in found if f is not None), None)
+    file = first_data_file(spark, path, conf)
     if file is None:
         raise FileNotFoundError(f"no data file at {path}")
+    fs = file.getFileSystem(conf)
     lines: list[str] = []
     stream = fs.open(file)
     try:

@@ -1,10 +1,12 @@
-"""Spark-job budgets of the ETL entry points.
+"""Spark-job budgets of the ETL and read entry points.
 
 Per-job fixed cost (scheduling, task launch, plan setup) dominates these
 entry points at the sizes they run at, so the number of jobs each starts
 is pinned here: schema inference and evolution are driver-side metadata
-work (no job), and the taxi pipeline is a one-row gate probe plus the
-observed write. Jobs are counted with a job group and the status tracker.
+work (no job), the taxi pipeline is a one-row gate probe plus the
+observed write, and a parquet read learns its schema from a footer read
+on the driver (no job). Jobs are counted with a job group and the status
+tracker.
 """
 
 from __future__ import annotations
@@ -13,9 +15,15 @@ import gzip
 import uuid
 from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from agent_data_pipeline_spark.io.sources import read_parquet
 from agent_data_pipeline_spark.pipelines import run_taxi_pipeline
+from agent_data_pipeline_spark.queries.core import read_events
 from agent_data_pipeline_spark.schema import ensure_table, infer_csv_schema
 
 from .test_taxi_pipeline import HEADER, ROWS
@@ -101,3 +109,51 @@ def test_cleaned_empty_gate_reads_the_write_metrics(spark, tmp_path):
     filtered_only = [r for r in ROWS if "109,110" in r or "111,112" in r]
     with pytest.raises(ValueError, match="No data in cleaned taxi trips"):
         run_taxi_pipeline(spark, _raw(spark, tmp_path, filtered_only), str(tmp_path / "c"))
+
+
+@pytest.mark.parametrize("layout", ["pyarrow_file", "spark_directory"])
+def test_read_parquet_runs_no_job(spark, tmp_path, layout):
+    path = str(tmp_path / "t.parquet")
+    if layout == "pyarrow_file":
+        pq.write_table(pa.table({"id": [0, 1, 2], "name": ["0", "1", None]}), path)
+    else:
+        spark.range(3).selectExpr("id", "cast(id as string) AS name").write.parquet(path)
+    with _jobs(spark) as jobs:
+        df = read_parquet(spark, path)
+    assert jobs == []
+    assert df.columns == ["id", "name"]
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2]
+
+
+def test_read_events_leaves_conf_unchanged_and_runs_no_failed_job(spark, tmp_path):
+    """The events layout stores ``ts`` as TIMESTAMP(NANOS), which a plain
+    Spark read rejects. The read must neither probe with a failing job
+    nor switch on a session-wide legacy conf."""
+    nanos = 1_704_067_200_000_000_000 + np.arange(4, dtype=np.int64) * 1_000_001_001
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": np.arange(4, dtype=np.int64),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+                "value": [1.0, 2.0, 3.0, 4.0],
+            }
+        ),
+        path,
+    )
+    before = {r.key: r.value for r in spark.sql("SET").collect()}
+    with _jobs(spark) as jobs:
+        events = read_events(spark, path)
+        rows = events.orderBy("event_id").select(
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts")
+        ).collect()
+    assert {r.key: r.value for r in spark.sql("SET").collect()} == before
+    tracker = spark.sparkContext.statusTracker()
+    assert [tracker.getJobInfo(j).status for j in jobs] == ["SUCCEEDED"] * len(jobs)
+    # the UTC wall clock the nanos record, truncated to microseconds
+    assert [r.ts for r in rows] == [
+        "2024-01-01 00:00:00.000000",
+        "2024-01-01 00:00:01.000001",
+        "2024-01-01 00:00:02.000002",
+        "2024-01-01 00:00:03.000003",
+    ]

@@ -4,8 +4,11 @@ brute-force oracle — the check the driver's rows-only pass can't do."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from agent_data_pipeline_spark.llmdata import similarity
 
@@ -14,7 +17,10 @@ from agent_data_pipeline_spark.llmdata import similarity
 def emb(spark, sf_oracle):
     df = spark.read.parquet(f"{sf_oracle}/embeddings.parquet").cache()
     df.count()
-    return df
+    yield df
+    # a cached relation left behind replaces the parquet scan in the
+    # plans of every later test that reads the same file
+    df.unpersist(blocking=True)
 
 
 def _pairs(rows):
@@ -75,6 +81,85 @@ def test_ivf_hi_recall_at_5(emb):
     )
     recall = len(ivf & exact) / len(exact)
     assert recall >= 0.95, f"IVF-hi recall@5 {recall:.3f} below floor"
+
+
+def _udf_ivf_topk(corpus, queries, k, n_cells, n_probe):
+    """The pandas-UDF IVF kernel ``ivf_topk`` replaced, kept as the
+    reference its JVM expressions must reproduce row for row."""
+    smat = similarity._train_sample(corpus, "vec_id", "embedding", 100_000)
+    centers = similarity._kmeans_fit(smat, n_cells, seed=42, iters=10)
+
+    @F.pandas_udf("int")
+    def nearest_cell(vecs: pd.Series) -> pd.Series:
+        vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        d = -2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]
+        return pd.Series(d.argmin(axis=1).astype("int32"))
+
+    @F.pandas_udf("double")
+    def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
+        am = np.stack([np.asarray(v, dtype=np.float64) for v in a])
+        bm = np.stack([np.asarray(v, dtype=np.float64) for v in b])
+        an = np.linalg.norm(am, axis=1)
+        bn = np.linalg.norm(bm, axis=1)
+        an[an == 0.0] = 1.0
+        bn[bn == 0.0] = 1.0
+        sims = np.einsum("ij,ij->i", am, bm) / (an * bn)
+        return pd.Series(np.floor(sims * 1e6 + 0.5) / 1e6)
+
+    corpus_cells = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
+    ).withColumn("cell", nearest_cell("c_vec"))
+    probe_rows = []
+    for r in queries.select("vec_id", "embedding").collect():
+        d = ((centers - np.asarray(r[1], dtype=np.float64)) ** 2).sum(axis=1)
+        for cell in np.argsort(d)[:n_probe]:
+            probe_rows.append((int(r[0]), list(map(float, r[1])), int(cell)))
+    probes = corpus.sparkSession.createDataFrame(
+        probe_rows, "query_id long, q_vec array<float>, cell int"
+    )
+    sims = (
+        corpus_cells.join(F.broadcast(probes), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", pair_dot("q_vec", "c_vec").alias("cosine_sim"))
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
+    return sims.withColumn("sim_rank", F.row_number().over(w).cast("long")).filter(
+        F.col("sim_rank") <= k
+    )
+
+
+@pytest.mark.parametrize("n_cells,n_probe", [(16, 4), (32, 12), (128, 40)])
+def test_ivf_rows_equal_udf_kernel(emb, n_cells, n_probe):
+    queries = emb.filter(F.col("vec_id") < 10)
+    got = sorted(map(tuple, similarity.ivf_topk(emb, queries, 10, n_cells, n_probe).collect()))
+    ref = sorted(map(tuple, _udf_ivf_topk(emb, queries, 10, n_cells, n_probe).collect()))
+    assert len(got) == 100
+    assert got == ref
+
+
+@pytest.mark.parametrize("n_cells", [16, 128])
+def test_assign_cells_is_numpy_argmin(spark, emb, n_cells):
+    """Nearest centre as a JVM expression = numpy's argmin (lowest index
+    on ties); the centroid literal reaches the JVM bit-exact."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
+    vmat = np.array([r.embedding for r in rows], dtype=np.float64)
+    centers = similarity._kmeans_fit(vmat, n_cells)
+    lit = spark.range(1).select(similarity._centroids(centers).alias("c")).first().c
+    assert np.array_equal(np.array([e.c for e in lit]), centers)
+    assert [e.j for e in lit] == list(range(n_cells))
+    want = (-2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]).argmin(axis=1)
+    got = similarity._assign_cells(emb, "embedding", centers).orderBy("vec_id").collect()
+    assert [r.cell for r in got] == want.tolist()
+
+
+def test_ivf_topk_runs_no_python(emb):
+    """Assignment and re-rank are JVM expressions and the probe list
+    arrives through Arrow, so no stage starts a Python worker."""
+    df = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, n_cells=32, n_probe=12)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython", "PythonRDD", "ExistingRDD"):
+        assert node not in plan, plan[:3000]
 
 
 def test_lsh_topk_is_deterministic(emb):
