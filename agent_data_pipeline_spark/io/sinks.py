@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .sources import read_parquet
+
 
 def write_parquet(
     df: DataFrame,
@@ -27,35 +29,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    mode: str = "overwrite",
-    num_files: int | None = None,
-) -> None:
-    """Range-clustered parquet layout: repartitionByRange on the cluster
-    keys, then sortWithinPartitions, so each output file covers a narrow,
-    nearly-disjoint key range. Parquet footers then carry tight min/max
-    stats per file/row-group, and any later scan with a predicate on the
-    cluster keys skips whole files (data skipping) — the poor man's
-    Z-order, and at 100 TB frequently the difference between touching 1%
-    and 100% of files for selective queries. One range-exchange shuffle
-    at write time buys every future read that locality.
-
-    tests/test_io.py asserts the per-file min/max spans are disjoint and
-    that a selective read prunes row groups.
-    """
-    parts = [df.sparkSession.sparkContext.defaultParallelism, num_files]
-    n = next(p for p in parts if p)
-    (
-        df.repartitionByRange(n, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
@@ -142,7 +115,7 @@ def compact_parquet(
                 total_bytes += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     staged = f"{path.rstrip('/')}__compacting"
-    writer = spark.read.parquet(path).repartition(n_files).write.mode("overwrite")
+    writer = read_parquet(spark, path).repartition(n_files).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged)

@@ -12,11 +12,16 @@ into the scan (Parquet: predicate pushdown + column pruning; CSV/JSON:
 column pruning). At 100 TB the parquet reader is the only sane default —
 CSV/JSON exist for ingest parity, after which data lands as Parquet.
 
-``read_parquet`` runs no Spark job to learn its schema: a bare
-``spark.read.parquet`` starts a one-task job that reads a footer on an
-executor. ``parquet_schema`` reads that same footer on the driver through
-the JVM and converts it with Spark's own converter, so the result is the
-schema the job would have produced.
+This module is the one place that learns a Parquet table's schema, for
+batch and stream reads alike: ``read_parquet`` (batch),
+``queries.core.read_events`` (the events layout) and
+``streaming.stream_parquet`` (file-source streams) all take it from
+``parquet_schema``. Nothing caches it: a read sees the files as they are
+when it is built. ``read_parquet`` runs no Spark job to learn its
+schema: a bare ``spark.read.parquet`` starts a one-task job that reads a
+footer on an executor. ``parquet_schema`` reads that same footer on the
+driver through the JVM and converts it with Spark's own converter, so the
+result is the schema the job would have produced.
 """
 
 from __future__ import annotations

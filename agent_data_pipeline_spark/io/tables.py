@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources import read_parquet
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -25,7 +27,7 @@ TABLE_NAMES = (
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
 ) -> dict[str, DataFrame]:
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+    return {name: read_parquet(spark, f"{sf_dir}/{name}.parquet") for name in names}
 
 
 def register_views(

@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.sources import read_parquet
+
 # Default MinHash geometry for the near-dup store/gate: 12 hashes in
 # 3 bands of 4. Band-collision probability for Jaccard s is
 # 1-(1-s^4)^3 — ~0.05 at s=0.5, ~0.62 at s=0.8, 1.0 for exact dups —
@@ -92,7 +94,7 @@ def write_store(store: DataFrame, path: str) -> None:
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def incremental_exact_status(

@@ -255,8 +255,8 @@ def hybrid_bm25_ann_rerank(
     Scale shape: both arms produce ≤ shortlist_k rows per query; their
     union (≤ 2·shortlist_k per query) is the ONLY thing the pair
     scorer ever sees. Candidate cosines are recomputed uniformly for
-    the unioned set (one broadcast join per side of the pair + an
-    Arrow-batched pair-dot), so a lexical-only candidate gets exactly
+    the unioned set (one broadcast join per side of the pair + the
+    ``similarity.cosine`` expression), so a lexical-only candidate gets exactly
     the score an ANN candidate gets. Tokenization runs only on
     shortlist join survivors.
 
@@ -329,18 +329,21 @@ def hybrid_bm25_ann_rerank(
     # uniform exact cosine over the bounded candidate pairs: broadcast
     # the pair list into the embeddings scan twice (neighbor side, then
     # query side) — only candidate vectors ever cross a join
-    n_vec = emb.select(
-        F.col(vec_id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    n_vec = similarity.with_norm(
+        emb.select(F.col(vec_id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        "c_vec",
+        "c_nrm",
     )
-    q_vec = emb.select(
-        F.col(vec_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    q_vec = similarity.with_norm(
+        emb.select(F.col(vec_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec",
+        "q_nrm",
     )
-    pair_dot = similarity._pair_dot_udf()
     cand = (
         n_vec.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(q_vec.filter(F.col("query_id").isin(q_ids))), "query_id")
-        .withColumn("cosine_sim", pair_dot(F.col("q_vec"), F.col("c_vec")))
-        .drop("q_vec", "c_vec")
+        .withColumn("cosine_sim", similarity.cosine("q_vec", "c_vec", "q_nrm", "c_nrm"))
+        .drop("q_vec", "c_vec", "q_nrm", "c_nrm")
     )
 
     # late-interaction lexical evidence: tokenize only join survivors

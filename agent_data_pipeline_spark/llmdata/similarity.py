@@ -21,10 +21,13 @@ Four tiers, in increasing scale:
   not per-plane Catalyst expressions — 64 plane-dots as literal expression
   trees evaluate interpreted and dominate runtime.
 * ``ivf_topk`` — k-means cells + multi-probe search. Cell assignment
-  (an argmin over a few dozen centres) and the per-pair cosine re-rank
-  are short enough for JVM array expressions, so the search starts no
-  Python worker; ``semantic_dedup`` assigns cells with the same
-  expression.
+  (an argmin over a few dozen centres) is short enough for a JVM array
+  expression, so the search starts no Python worker; ``semantic_dedup``
+  assigns cells with the same expression.
+
+Every ANN path re-ranks its candidate pairs with one JVM expression,
+``cosine``, over vectors and norms that ``with_norm`` computes once per
+row.
 
 Pandas UDFs stay where built-in expressions cannot do the work: one
 matmul per Arrow batch or per group (SRP signatures, brute-force top-k,
@@ -240,19 +243,23 @@ def srp_buckets_udf(dim: int, n_tables: int, n_bits: int, normalize: bool = True
     return buckets
 
 
-def _pair_dot_udf():
-    @F.pandas_udf("double")
-    def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        bm = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        an = np.linalg.norm(am, axis=1)
-        bn = np.linalg.norm(bm, axis=1)
-        an[an == 0.0] = 1.0
-        bn[bn == 0.0] = 1.0
-        sims = np.einsum("ij,ij->i", am, bm) / (an * bn)
-        return pd.Series(np.floor(sims * 1e6 + 0.5) / 1e6)
+def with_norm(df: DataFrame, vec_col: str, nrm_col: str) -> DataFrame:
+    """Casts ``vec_col`` to an array of doubles and adds its norm as
+    ``nrm_col``: the per-row inputs of ``cosine``, computed once per row
+    rather than once per pair."""
+    df = df.withColumn(vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double")))
+    return df.withColumn(nrm_col, _norm(F.col(vec_col)))
 
-    return pair_dot
+
+def cosine(a: str, b: str, a_nrm: str, b_nrm: str):
+    """``rnd(a·b / (‖a‖·‖b‖), 6)`` over double-vector and norm columns,
+    with a zero norm counted as 1: the re-rank score of every ANN path,
+    as a JVM expression."""
+
+    def nonzero(n):
+        return F.when(F.col(n) == 0.0, F.lit(1.0)).otherwise(F.col(n))
+
+    return rnd(_dot(F.col(a), F.col(b)) / (nonzero(a_nrm) * nonzero(b_nrm)), _ROUND)
 
 
 def lsh_topk(
@@ -270,13 +277,14 @@ def lsh_topk(
 
     Plan shape: bucket-sign UDF (one matmul/batch) -> posexplode of IDS
     ONLY -> equi-join on (table, bucket) -> dropDuplicates(query,
-    candidate) -> re-attach both vectors by id -> vectorized cosine
-    re-rank -> per-query top-k window. Shuffle keys are bucket ids;
-    n_bits controls bucket occupancy (~n / 2^n_bits per table), the skew
-    knob. The candidate shuffle deliberately carries NO vectors (guide
-    §8: decide with small rows, attach payloads once): the r12 shape
-    dragged the 64-float corpus vector through the explode and the
-    dedup exchange x n_tables — ~64x the bytes for the same candidates.
+    candidate) -> re-attach both vectors (as doubles, with their norms)
+    by id -> ``cosine`` re-rank -> per-query top-k window. Shuffle keys
+    are bucket ids; n_bits controls bucket occupancy (~n / 2^n_bits per
+    table), the skew knob. The candidate shuffle deliberately carries
+    NO vectors (guide §8: decide with small rows, attach payloads once):
+    the r12 shape dragged the 64-float corpus vector through the explode
+    and the dedup exchange x n_tables — ~64x the bytes for the same
+    candidates.
 
     Round-14 (settling the r13 driver-measured regression): the
     ``spread()`` the r13 rework added before the bucket UDF is REMOVED.
@@ -306,17 +314,22 @@ def lsh_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    cvecs = with_norm(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        "c_vec",
+        "c_nrm",
+    )
+    qvecs = with_norm(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec",
+        "q_nrm",
+    )
     # id-grain joins attach each vector exactly once, AFTER dedup: the
     # corpus side auto-broadcasts when small and shuffles candidate-grain
     # (not candidate x tables) when not; the query side is driver-small.
     cand = cand_ids.join(cvecs, "neighbor_id").join(F.broadcast(qvecs), "query_id")
-    pair_dot = _pair_dot_udf()
     sims = cand.select(
-        "query_id",
-        "neighbor_id",
-        pair_dot(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim"),
+        "query_id", "neighbor_id", cosine("q_vec", "c_vec", "q_nrm", "c_nrm").alias("cosine_sim")
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
     return (
@@ -647,16 +660,11 @@ def ivf_topk(
         "query_id long, q_vec array<double>, q_nrm double, cell int",
     )
 
-    c_nrm = F.when(F.col("c_nrm") == 0.0, F.lit(1.0)).otherwise(F.col("c_nrm"))
     sims = (
         corpus_cells.join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
-            "query_id",
-            "neighbor_id",
-            rnd(_dot(F.col("q_vec"), F.col("_v")) / (F.col("q_nrm") * c_nrm), _ROUND).alias(
-                "cosine_sim"
-            ),
+            "query_id", "neighbor_id", cosine("q_vec", "_v", "q_nrm", "c_nrm").alias("cosine_sim")
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))

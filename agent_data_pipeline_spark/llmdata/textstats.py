@@ -1,10 +1,8 @@
-"""Text-analysis operators: token stats, quality scoring, language-ID
-heuristic, document fingerprinting.
+"""Text-analysis operators: token stats, quality scoring, document
+fingerprinting.
 
-Everything except language-ID is pure JVM expression work (split, regexp,
-higher-order array fns) — codegen'd, no Python, scan-bound at 100 TB.
-Language-ID uses a char-n-gram profile heuristic; profiles are plan-time
-literal maps so scoring is still JVM-side.
+Pure JVM expression work (split, regexp, higher-order array fns) —
+codegen'd, no Python, scan-bound at 100 TB.
 """
 
 from __future__ import annotations
@@ -84,46 +82,6 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         rnd(sw_ratio, 6).alias("stopword_ratio"),
         rnd(punct_ratio(text), 6).alias("punct_ratio"),
         once(quality).alias("quality_score"),
-    )
-
-
-# Tiny per-language character/stopword profiles for the n-gram heuristic.
-# Real systems learn these from corpora; the heuristic contract is:
-# score(lang) = sum of profile-hit counts, argmax wins, 'und' on no hits.
-_LANG_PROFILES: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "of", "ing", "tion"),
-    "es": ("que", "de", "la", "ción", "los"),
-    "fr": ("les", "des", "une", "ment", "tion"),
-    "de": ("der", "und", "ein", "sch", "ung"),
-    "zh": ("的", "是", "了", "在", "我"),
-}
-
-
-def _lang_score(text: Column, lang: str) -> Column:
-    total = F.lit(0).cast("long")
-    for pat in _LANG_PROFILES[lang]:
-        total = total + F.size(F.split(text, F.lit(pat), -1).cast("array<string>")) - 1
-    return total
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic language-ID: per-language n-gram hit counts, argmax.
-
-    Note: the driver's synthetic `documents` fixture draws the same
-    vocabulary for all langs, so content-based ID cannot recover its
-    `lang` column there; the operator is exercised for mechanics (tests
-    use hand-built multilingual fixtures for accuracy).
-    """
-    text = F.lower(F.col(text_col))
-    scored = F.array(
-        *[
-            F.struct(_lang_score(text, lang).alias("score"), F.lit(lang).alias("lang"))
-            for lang in _LANG_PROFILES
-        ]
-    )
-    best = F.array_max(scored)
-    return df.withColumn(
-        "lang_pred", F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
     )
 
 

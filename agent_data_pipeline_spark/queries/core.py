@@ -33,7 +33,7 @@ from ..fns import (  # noqa: F401  (re-exported for query modules)
     once,
     rnd,
 )
-from ..io.sources import parquet_schema
+from ..io.sources import parquet_schema, read_parquet
 
 
 @dataclass(frozen=True)
@@ -75,66 +75,20 @@ def duck_materialize(sql: str) -> str:
     return _re.sub(r"WINDOW (\w+) AS MATERIALIZED \(", r"WINDOW \1 AS (", out)
 
 
-# Schema catalog (round 14, guide §7.3 driver-side cost): a bare
-# ``spark.read.parquet(path)`` infers the schema from a file footer on
-# EVERY call — measured 70-264 ms per call at sf0.1 vs 14-22 ms with the
-# schema supplied, and the bench's 50 queries construct ~130 table reads
-# per pass. A production engine reads table schemas from a catalog, not
-# from footers per query; this is that catalog: METADATA only (a
-# StructType keyed on path + mtime + size — never data, never plans, and
-# a rewritten fixture invalidates the key), so every query still scans
-# and computes from the parquet inputs. A miss reads one footer on the
-# driver (``io.sources.parquet_schema``), so filling it runs no Spark job;
-# a hit skips even that footer read.
-_SCHEMA_CACHE: dict = {}
-_EVENTS_READ_CACHE: dict = {}
-
-
-def _schema_key(path: str):
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (path, st.st_mtime_ns, st.st_size)
-
-
-def table_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The parquet schema at ``path``, from the schema catalog."""
-    key = _schema_key(path)
-    schema = _SCHEMA_CACHE.get(key) if key is not None else None
-    if schema is None:
-        schema = parquet_schema(spark, path) or spark.read.parquet(path).schema
-        if key is not None:
-            _SCHEMA_CACHE[key] = schema
-    return schema
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return read_events(spark, f"{sf_dir}/{name}.parquet")
     path = f"{sf_dir}/{name}.parquet"
-    return spark.read.schema(table_schema(spark, path)).parquet(path)
+    return read_events(spark, path) if name == "events" else read_parquet(spark, path)
 
 
 def events_schema(spark: SparkSession, path: str) -> tuple[T.StructType, bool]:
-    """``(schema, ts_is_long)`` of the events parquet at ``path``, from the
-    schema catalog. The footer is converted with TIMESTAMP(NANOS) mapped
-    to ``long`` (on a copy of the session conf), so a nanos ``ts`` reads
-    as raw epoch nanos; ``ts_is_long`` says the caller must rebuild the
-    timestamp from them."""
-    key = _schema_key(path)
-    cached = _EVENTS_READ_CACHE.get(key) if key is not None else None
-    if cached is None:
-        schema = parquet_schema(spark, path, nanos_as_long=True)
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-        ts = next((f.dataType for f in schema.fields if f.name == "ts"), None)
-        cached = (schema, isinstance(ts, T.LongType))
-        if key is not None:
-            _EVENTS_READ_CACHE[key] = cached
-    return cached
+    """``(schema, ts_is_long)`` of the events parquet at ``path``. The
+    footer is converted with TIMESTAMP(NANOS) mapped to ``long`` (on a
+    copy of the session conf), so a nanos ``ts`` reads as raw epoch
+    nanos; ``ts_is_long`` says the caller must rebuild the timestamp
+    from them."""
+    schema = parquet_schema(spark, path, nanos_as_long=True) or read_parquet(spark, path).schema
+    ts = next((f.dataType for f in schema.fields if f.name == "ts"), None)
+    return schema, isinstance(ts, T.LongType)
 
 
 def with_nanos_ts(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -206,9 +206,7 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink, drained; the oracle is the identical batch algebra.
     At 100 TB-per-day the static side re-broadcasts per batch, which is
     exactly the semantics a slowly-refreshed dimension wants."""
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
+    from ..streaming import drain_to_frame
     from .temporal import _read_events_stream
 
     tiers = t(spark, sf_dir, "customer").select(
@@ -223,10 +221,7 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         rnd(F.sum("value"), 2).alias("sum_value"),
     )
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(agged, name, output_mode="complete")
-    drain(q)
-    return spark.table(name).orderBy("tier", "event_type")
+    return drain_to_frame(agged, output_mode="complete").orderBy("tier", "event_type")
 
 
 _STREAM_STATIC_JOIN_SQL = """

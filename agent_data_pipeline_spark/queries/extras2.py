@@ -251,9 +251,7 @@ def _stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain streaming dropDuplicates whose state grows forever). Projected
     to the key columns, the drained result is the batch DISTINCT —
     which-row-survived cannot leak into the hash."""
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
+    from ..streaming import drain_to_frame
     from .temporal import _read_events_stream
 
     # withWatermark requires TIMESTAMP; the fixture surfaces TIMESTAMP_NTZ
@@ -267,10 +265,7 @@ def _stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(deduped, name, output_mode="append")
-    drain(q)
-    return spark.table(name)
+    return drain_to_frame(deduped, output_mode="append")
 
 
 # --- TPC-H Q7-shaped six-way join -------------------------------------------

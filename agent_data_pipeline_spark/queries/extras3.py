@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.sources import read_parquet
 from .core import QuerySpec, rnd, t
 
 _IO_TMP = "/tmp/adps_io"
@@ -129,7 +130,7 @@ def _partition_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters in tests/test_plans.py). This is the 100 TB
     difference between reading a day and reading a year."""
     path = partitioned_events_path(spark, sf_dir)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.where(F.col("event_date") == F.lit("2024-01-02").cast("date"))
         .groupBy("event_type")

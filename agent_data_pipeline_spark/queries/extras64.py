@@ -406,15 +406,11 @@ def _stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dsir_doc_weights`` (identical doubles through the collect/lit
     round-trip; fns.rnd), so the batch SQL oracle is exact — streaming
     execution, hash-checkable result."""
-    import os
-    import uuid
-
     from ..fns import bounded_collect
     from ..llmdata import classify
-    from ..streaming import drain, stream_to_memory
+    from ..streaming import drain_to_frame, stream_parquet
 
-    path = f"{sf_dir}/documents.parquet"
-    batch = spark.read.parquet(path)
+    batch = t(spark, sf_dir, "documents")
     model = classify.dsir_bucket_model(
         batch.withColumn(
             "is_target", F.coalesce(F.col("lang") == "en", F.lit(False))
@@ -436,12 +432,7 @@ def _stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     oov = rows[0]["_lr_unseen"]
 
-    if os.path.isdir(path):
-        reader, stream_dir = spark.readStream, path
-    else:
-        reader = spark.readStream.option("pathGlobFilter", "documents.parquet")
-        stream_dir = sf_dir
-    docs = reader.schema(batch.schema).parquet(stream_dir)
+    docs = stream_parquet(spark, f"{sf_dir}/documents.parquet", batch.schema)
 
     # bind tokens and grams as named columns — Catalyst does not
     # eliminate common subexpressions across lambda boundaries, so an
@@ -466,11 +457,8 @@ def _stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_tc", "_grams")
         .filter(F.col("w") > 0)
     )
-    name = f"stream_dsir_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(gated, name, output_mode="append")
-    drain(q)
     return (
-        spark.table(name)
+        drain_to_frame(gated, output_mode="append")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_kept"),

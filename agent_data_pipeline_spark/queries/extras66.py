@@ -149,10 +149,7 @@ def _stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit rows land in an append sink and the census is aggregated after
     the drain (the stream_docs_quality_dedup pattern — keeps the
     streaming section stateless)."""
-    import os
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
+    from ..streaming import drain_to_frame, stream_parquet
 
     ref = (
         t(spark, sf_dir, "documents")
@@ -164,14 +161,7 @@ def _stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc.write_store(ref_bands, bp)
     static_bands = inc.read_store(spark, bp).withColumn("_hit", F.lit(1))
 
-    path = f"{sf_dir}/documents.parquet"
-    batch_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        reader, stream_dir = spark.readStream, path
-    else:
-        reader = spark.readStream.option("pathGlobFilter", "documents.parquet")
-        stream_dir = sf_dir
-    raw = reader.schema(batch_schema).parquet(stream_dir)
+    raw = stream_parquet(spark, f"{sf_dir}/documents.parquet")
 
     variants = F.array_compact(
         F.array(
@@ -208,11 +198,8 @@ def _stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = banded.join(static_bands, ["band", "band_key"], "left").select(
         "source", "sid", "n_tokens", F.coalesce("_hit", F.lit(0)).alias("hit")
     )
-    name = f"stream_neardup_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(joined, name, output_mode="append")
-    drain(q)
     per_doc = (
-        spark.table(name)
+        drain_to_frame(joined, output_mode="append")
         .groupBy("source", "sid", "n_tokens")
         .agg(F.max("hit").alias("flag"))
     )

@@ -8,13 +8,24 @@ batch == streaming output. The DuckDB oracle checks the batch semantics.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..ops.asof import asof_join
 from ..ops.sessionize import session_summary
-from .core import QuerySpec, events_schema, rnd, t, table_schema, with_nanos_ts
+from ..io.sources import read_parquet
+from ..streaming import (
+    drain,
+    drain_to_frame,
+    foreach_batch_parquet_sink,
+    stateful_running_agg,
+    stream_parquet,
+)
+from .core import QuerySpec, events_schema, rnd, t, with_nanos_ts
 
 
 def _tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,25 +170,13 @@ FROM purchases p ASOF LEFT JOIN clicks c
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events fixture, with the schema and nanos
-    handling of the batch read (``core.events_schema``: the footer read
-    on the driver, a TIMESTAMP(NANOS) ``ts`` read as long and rebuilt).
-    FileStreamSource requires a directory: when events.parquet is a
-    single file (the driver fixtures), stream the sf dir with a glob
-    filter selecting it; when it is itself a directory of part files
-    (standard Spark table layout), stream it directly — pathGlobFilter
-    matches leaf file names, so the single-file glob would silently
-    match nothing."""
-    import os
-
+    """readStream over the events fixture (a file or a directory of part
+    files, see ``stream_parquet``), with the schema and nanos handling of
+    the batch read (``core.events_schema``: the footer read on the
+    driver, a TIMESTAMP(NANOS) ``ts`` read as long and rebuilt)."""
     path = f"{sf_dir}/events.parquet"
     schema, ts_is_long = events_schema(spark, path)
-    if os.path.isdir(path):
-        stream_dir, reader = path, spark.readStream
-    else:
-        stream_dir = sf_dir
-        reader = spark.readStream.option("pathGlobFilter", "events.parquet")
-    stream = reader.schema(schema).parquet(stream_dir)
+    stream = stream_parquet(spark, path, schema)
     return with_nanos_ts(spark, stream) if ts_is_long else stream
 
 
@@ -194,10 +193,6 @@ def _stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memory sink is test-scale by design — the production sink is
     foreachBatch parquet/JDBC.
     """
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
-
     stream = _read_events_stream(spark, sf_dir)
     # window on TIMESTAMP_NTZ: the cast renders the instant in the
     # session TZ and keeps the naive wall clock, so F.window's grid
@@ -212,10 +207,7 @@ def _stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(agged, name, output_mode="complete")
-    drain(q)
-    return spark.table(name)
+    return drain_to_frame(agged, output_mode="complete")
 
 
 def _stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,10 +217,6 @@ def _stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink, drained). Shares the sliding batch oracle; the NTZ cast
     pins the window grid to the naive wall clock so the epoch-math oracle
     matches under any whole-hour session TZ."""
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
-
     stream = _read_events_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     )
@@ -237,10 +225,7 @@ def _stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), rnd(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(agged, name, output_mode="complete")
-    drain(q)
-    return spark.table(name)
+    return drain_to_frame(agged, output_mode="complete")
 
 
 def _stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,10 +238,6 @@ def _stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes. Shares the batch oracle, so the driver hash-checks that the
     state-store session merge agrees exactly with the lag+cumsum batch
     sessionization (ops/sessionize)."""
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
-
     stream = _read_events_stream(spark, sf_dir)
     agged = (
         stream.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -269,10 +250,7 @@ def _stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(agged, name, output_mode="complete")
-    drain(q)
-    return spark.table(name)
+    return drain_to_frame(agged, output_mode="complete")
 
 
 def _stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,21 +258,23 @@ def _stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type totals -> foreachBatch parquet sink (complete mode, each
     micro-batch overwrites with the batch writer — the pattern that also
     carries JDBC/multi-sink fan-out) -> read the sunk files back. The
-    oracle checks what landed ON DISK, not a memory sink."""
-    import tempfile
-
-    from ..streaming import drain, foreach_batch_parquet_sink
-
+    oracle checks what landed ON DISK, not a memory sink. The sink's
+    temporary directory is removed once the read-back is materialized."""
     stream = _read_events_stream(spark, sf_dir)
     agged = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), rnd(F.sum("value"), 2).alias("sum_value")
     )
     base = tempfile.mkdtemp(prefix="spark_fbatch_")
-    q = foreach_batch_parquet_sink(
-        agged, f"{base}/out", f"{base}/ckpt", mode="overwrite", output_mode="complete"
-    )
-    drain(q)
-    return spark.read.parquet(f"{base}/out")
+    try:
+        drain(
+            foreach_batch_parquet_sink(
+                agged, f"{base}/out", f"{base}/ckpt", mode="overwrite", output_mode="complete"
+            )
+        )
+        # materialized before the directory it was read from goes
+        return read_parquet(spark, f"{base}/out").localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 _STREAM_FOREACHBATCH_SQL = """
@@ -315,10 +295,6 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched pairs as they are found, so append mode drains the full
     result on a finite replay; the oracle is the identical batch join.
     """
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
-
     # withWatermark requires TIMESTAMP; the fixture surfaces TIMESTAMP_NTZ
     # in this Spark build. Cast for the watermarked join (session TZ is
     # UTC — wall-clock preserving) and restore NTZ on the output columns
@@ -358,10 +334,7 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(joined, name, output_mode="append")
-    drain(q)
-    return spark.table(name)
+    return drain_to_frame(joined, output_mode="append")
 
 
 _STREAM_STREAM_JOIN_SQL = """
@@ -390,20 +363,7 @@ def _stream_docs_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     column derives from the deduped text itself, so the result is
     invariant to WHICH copy survived — what makes the batch oracle
     exact."""
-    import os
-    import uuid
-
-    from ..streaming import drain, stream_to_memory
-
-    path = f"{sf_dir}/documents.parquet"
-    batch_schema = table_schema(spark, path)
-    if os.path.isdir(path):
-        reader, stream_dir = spark.readStream, path
-    else:
-        reader = spark.readStream.option("pathGlobFilter", "documents.parquet")
-        stream_dir = sf_dir
-    docs = reader.schema(batch_schema).parquet(stream_dir)
-
+    docs = stream_parquet(spark, f"{sf_dir}/documents.parquet")
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
     survivors = (
         docs.withColumn("n_tokens", n_tok)
@@ -411,11 +371,8 @@ def _stream_docs_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("fp", F.md5("text"))
         .dropDuplicates(["source", "fp"])
     )
-    name = f"stream_docs_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(survivors, name, output_mode="append")
-    drain(q)
     return (
-        spark.table(name)
+        drain_to_frame(survivors, output_mode="append")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -447,17 +404,10 @@ def _stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the DuckDB oracle, so the driver hash-checks the stateful
     operator end-to-end. The update log is reduced to latest-per-key by
     max(n_events) (the counter is strictly monotone per key)."""
-    import uuid
-
-    from ..streaming import drain, stateful_running_agg, stream_to_memory
-
     stream = stateful_running_agg(
         _read_events_stream(spark, sf_dir), ["user_id"], "value"
     )
-    name = f"stream_stateful_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(stream, name, output_mode="update")
-    drain(q)
-    upd = spark.table(name)
+    upd = drain_to_frame(stream, output_mode="update")
     return (
         upd.groupBy("user_id")
         .agg(

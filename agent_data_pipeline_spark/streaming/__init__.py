@@ -2,6 +2,7 @@
 
 from .core import (
     drain,
+    drain_to_frame,
     foreach_batch_parquet_sink,
     session_window_agg,
     sliding_window_agg,
@@ -16,6 +17,7 @@ from .stateful import stateful_running_agg
 __all__ = [
     "stateful_running_agg",
     "drain",
+    "drain_to_frame",
     "foreach_batch_parquet_sink",
     "session_window_agg",
     "sliding_window_agg",

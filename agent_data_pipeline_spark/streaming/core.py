@@ -23,6 +23,7 @@ Design rules for scale:
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,22 +32,36 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import TimestampNTZType
 
+from ..io.sources import parquet_schema
 from ..schema import bind_csv_columns
 
 
 def stream_parquet(
     spark: SparkSession,
     path: str,
-    schema: T.StructType | str,
+    schema: T.StructType | str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream (S2 analog): new parquet files appearing under
     ``path`` become micro-batches. ``max_files_per_trigger=1`` gives
     deterministic one-file-per-batch replay — how the equivalence tests
-    step watermarks forward."""
-    reader = spark.readStream.schema(schema)
+    step watermarks forward.
+
+    ``path`` is a directory or a single file. The file source watches
+    directories only, so a file streams its parent directory with
+    ``pathGlobFilter`` set to its name (the filter matches leaf file
+    names, so it cannot select a directory's part files). Without
+    ``schema`` the stream takes the batch read's schema
+    (``io.sources.parquet_schema``, a footer read on the driver)."""
+    if schema is None:
+        schema = parquet_schema(spark, path)
+    reader = spark.readStream if schema is None else spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).isFile(jpath):
+        reader = reader.option("pathGlobFilter", jpath.getName())
+        path = jpath.getParent().toString()
     return reader.parquet(path)
 
 
@@ -289,3 +304,19 @@ def drain(query: StreamingQuery, timeout: float = 600.0) -> dict:
     query.stop()
     query.awaitTermination(timeout)
     return progress
+
+
+def drain_to_frame(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Runs the stream ``df`` into a memory sink until its source is
+    drained (``drain``) and returns what the sink holds. The sink's
+    temp view is dropped before returning: the frame keeps its own
+    reference to the sink's rows, so the session catalog is left as it
+    was."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    query = stream_to_memory(df, name, output_mode=output_mode)
+    try:
+        drain(query)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)

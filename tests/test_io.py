@@ -6,10 +6,13 @@ in this container); file formats round-trip through real writes.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from agent_data_pipeline_spark.io import sinks, sources
+from agent_data_pipeline_spark.queries.core import t
 
 
 @pytest.fixture(scope="module")
@@ -227,3 +230,17 @@ def test_csv_malformed_rows_captured_permissive(spark, tmp_path):
     # count() prunes every column, so the CSV parser never sees the bad
     # cell and drops nothing — materialize rows to exercise the parse.
     assert len(dropped.collect()) == 2
+
+
+def test_table_read_sees_a_rewritten_nested_partition(spark, tmp_path):
+    """A table read learns its schema from the files as they are when it
+    is built: a partition file rewritten with a new column shows up in
+    the next read, though the table directory itself is unchanged."""
+    part = tmp_path / "x.parquet" / "p=1" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1]}), part)
+    assert t(spark, str(tmp_path), "x").columns == ["a", "p"]
+    pq.write_table(pa.table({"a": [1], "b": [2]}), part)
+    back = t(spark, str(tmp_path), "x")
+    assert back.columns == ["a", "b", "p"]
+    assert [tuple(r) for r in back.collect()] == [(1, 2, 1)]

@@ -22,8 +22,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from agent_data_pipeline_spark.io.sources import read_parquet
+from agent_data_pipeline_spark.io.tables import load_tables
+from agent_data_pipeline_spark.llmdata.incremental import read_store
 from agent_data_pipeline_spark.pipelines import run_taxi_pipeline
-from agent_data_pipeline_spark.queries.core import read_events
+from agent_data_pipeline_spark.queries.core import read_events, t
 from agent_data_pipeline_spark.schema import ensure_table, infer_csv_schema
 
 from .test_taxi_pipeline import HEADER, ROWS
@@ -123,6 +125,21 @@ def test_read_parquet_runs_no_job(spark, tmp_path, layout):
     assert jobs == []
     assert df.columns == ["id", "name"]
     assert sorted(r.id for r in df.collect()) == [0, 1, 2]
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda spark, sf: load_tables(spark, sf),
+        lambda spark, sf: read_store(spark, f"{sf}/orders.parquet"),
+        lambda spark, sf: [t(spark, sf, name) for name in ("orders", "events")],
+    ],
+    ids=["load_tables", "read_store", "t"],
+)
+def test_table_readers_run_no_job(spark, sf_smoke, read):
+    with _jobs(spark) as jobs:
+        read(spark, sf_smoke)
+    assert jobs == []
 
 
 def test_read_events_leaves_conf_unchanged_and_runs_no_failed_job(spark, tmp_path):

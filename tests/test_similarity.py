@@ -83,17 +83,9 @@ def test_ivf_hi_recall_at_5(emb):
     assert recall >= 0.95, f"IVF-hi recall@5 {recall:.3f} below floor"
 
 
-def _udf_ivf_topk(corpus, queries, k, n_cells, n_probe):
-    """The pandas-UDF IVF kernel ``ivf_topk`` replaced, kept as the
-    reference its JVM expressions must reproduce row for row."""
-    smat = similarity._train_sample(corpus, "vec_id", "embedding", 100_000)
-    centers = similarity._kmeans_fit(smat, n_cells, seed=42, iters=10)
-
-    @F.pandas_udf("int")
-    def nearest_cell(vecs: pd.Series) -> pd.Series:
-        vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        d = -2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+def _udf_pair_dot():
+    """The pandas-UDF cosine kernel the ANN re-ranks used before
+    ``similarity.cosine``, kept as the reference it must reproduce."""
 
     @F.pandas_udf("double")
     def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -106,6 +98,22 @@ def _udf_ivf_topk(corpus, queries, k, n_cells, n_probe):
         sims = np.einsum("ij,ij->i", am, bm) / (an * bn)
         return pd.Series(np.floor(sims * 1e6 + 0.5) / 1e6)
 
+    return pair_dot
+
+
+def _udf_ivf_topk(corpus, queries, k, n_cells, n_probe):
+    """The pandas-UDF IVF kernel ``ivf_topk`` replaced, kept as the
+    reference its JVM expressions must reproduce row for row."""
+    smat = similarity._train_sample(corpus, "vec_id", "embedding", 100_000)
+    centers = similarity._kmeans_fit(smat, n_cells, seed=42, iters=10)
+
+    @F.pandas_udf("int")
+    def nearest_cell(vecs: pd.Series) -> pd.Series:
+        vmat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        d = -2.0 * (vmat @ centers.T) + (centers**2).sum(axis=1)[None, :]
+        return pd.Series(d.argmin(axis=1).astype("int32"))
+
+    pair_dot = _udf_pair_dot()
     corpus_cells = corpus.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).withColumn("cell", nearest_cell("c_vec"))
@@ -160,6 +168,25 @@ def test_ivf_topk_runs_no_python(emb):
     plan = df._jdf.queryExecution().executedPlan().toString()
     for node in ("ArrowEvalPython", "BatchEvalPython", "PythonRDD", "ExistingRDD"):
         assert node not in plan, plan[:3000]
+
+
+@pytest.mark.parametrize("name", ["ann_lsh_topk", "hybrid_bm25_ann_rerank"])
+def test_ann_rerank_rows_equal_udf_kernel(spark, sf_oracle, monkeypatch, name):
+    """The registry ANN queries re-rank with the ``cosine`` expression;
+    with the pandas-UDF kernel put back in its place the rows, including
+    ``cosine_sim``, are the same, and only that run plans the UDF."""
+    from agent_data_pipeline_spark.queries import REGISTRY
+
+    pair_dot = _udf_pair_dot()
+    got = REGISTRY[name].spark(spark, sf_oracle)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "cosine", lambda a, b, _an, _bn: pair_dot(F.col(a), F.col(b)))
+        ref = REGISTRY[name].spark(spark, sf_oracle)
+    got_rows, ref_rows = sorted(map(tuple, got.collect())), sorted(map(tuple, ref.collect()))
+    assert len(got_rows) == 50
+    assert got_rows == ref_rows
+    assert "pair_dot" in ref._jdf.queryExecution().executedPlan().toString()
+    assert "pair_dot" not in got._jdf.queryExecution().executedPlan().toString()
 
 
 def test_lsh_topk_is_deterministic(emb):

@@ -435,3 +435,32 @@ def test_stream_cdc_dimension_maintenance(spark, tmp_path):
 
     got = {r.k: r.v for r in state["df"].collect()}
     assert got == {1: "a2", 3: "c", 4: "d"}
+
+
+def test_stream_queries_leave_no_views_or_queries(spark, sf_smoke):
+    """Every ``stream_*`` registry query drains into a sink and returns
+    a frame that stays readable, without leaving the sink's temp view
+    in the session catalog or a query running."""
+    from agent_data_pipeline_spark.queries import REGISTRY
+
+    names = [n for n in REGISTRY if n.startswith("stream_")]
+    assert len(names) == 11
+    before = sorted(tbl.name for tbl in spark.catalog.listTables())
+    for name in names:
+        assert REGISTRY[name].spark(spark, sf_smoke).collect(), name
+    assert sorted(tbl.name for tbl in spark.catalog.listTables()) == before
+    assert spark.streams.active == []
+
+
+def test_foreachbatch_totals_leaves_no_temp_dir(spark, sf_smoke):
+    import glob
+    import os
+    import tempfile
+
+    from agent_data_pipeline_spark.queries import REGISTRY
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_fbatch_*")
+    before = set(glob.glob(pattern))
+    rows = REGISTRY["stream_foreachbatch_totals"].spark(spark, sf_smoke).collect()
+    assert sum(r.n_events for r in rows) == read_events(spark, f"{SF}/events.parquet").count()
+    assert set(glob.glob(pattern)) == before
