@@ -1,6 +1,6 @@
 from .sources import read_csv, read_jdbc, read_json, read_parquet, sample_csv_head
 from .sinks import write_csv, write_jdbc, write_parquet
-from .tables import TABLE_NAMES, load_tables, register_views
+from .tables import TABLE_NAMES, load_tables
 
 __all__ = [
     "read_csv",
@@ -13,5 +13,4 @@ __all__ = [
     "write_parquet",
     "TABLE_NAMES",
     "load_tables",
-    "register_views",
 ]

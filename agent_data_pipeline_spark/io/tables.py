@@ -30,16 +30,6 @@ def load_tables(
     return {name: read_parquet(spark, f"{sf_dir}/{name}.parquet") for name in names}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the SQL API surface)."""
-    tables = load_tables(spark, sf_dir, names)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 def save_bucketed(
     df: DataFrame,
     table: str,

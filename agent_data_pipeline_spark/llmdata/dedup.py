@@ -33,11 +33,12 @@ SCALING.md).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..fns import once, rnd, spread
+from ..ops.observe import checkpoint_observed, release_checkpoint
 
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -534,7 +535,6 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over an undirected pair list by iterative
     min-label propagation: every node starts labeled with itself; each
@@ -544,14 +544,16 @@ def connected_components(
     groups collapse to one representative even through chains a->b->c).
 
     Scale design: one shuffle per round (neighbor-min aggregate on the
-    node key), converging in O(component diameter) rounds — near-dup
-    components are shallow (dup clusters, not long paths), so 3-5 rounds
-    is typical. Lineage is truncated with localCheckpoint each round so
-    the plan does not grow unboundedly (the classic iterative-algorithm
-    trap); the convergence count rides each round's
-    checkpoint job as an ``observe`` metric (one driver action/round). This is the
-    DataFrame rendering of the map-reduce CC algorithm (cf. small-star/
-    large-star, Kiveris et al.); GraphFrames is not assumed present.
+    node key). A label moves one hop per round, so the loop takes
+    O(component diameter) rounds: a few on star-shaped duplicate
+    clusters, about n on an n-node chain of edited copies. Labels only
+    decrease, so their sum is a strictly decreasing potential until the
+    fixpoint: a round whose label sum did not drop changed no label,
+    and the loop stops there, with no round cap. Each round is one
+    ``checkpoint_observed`` job (the checkpoint truncates the plan and
+    the label sum rides the same job), and the previous round's labels
+    are released once the next exist. GraphFrames is not assumed
+    present.
 
     Returns (node, component) — component is the min node id reachable.
     """
@@ -567,44 +569,36 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    labels = (
+
+    # decimal: a sum of long ids can overflow long at scale
+    label_sum = {"label_sum": F.sum(F.col("comp").cast("decimal(38,0)"))}
+
+    labels, stats = checkpoint_observed(
         edges.select(F.col("u").alias("node"))
         .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
+        .withColumn("comp", F.col("node")),
+        label_sum,
     )
-    for _ in range(max_iter):
+    while True:
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u")
             .agg(F.min("comp").alias("ncomp"))
         )
-        # the convergence count rides the checkpoint job itself as an
-        # observe() metric (the k_core pattern): one driver action per
-        # round, and the checkpointed rows no longer carry the _chg flag.
-        # obs.get blocks until an action runs: the eager localCheckpoint
-        # must stay the first action on the observed frame.
-        obs = Observation()
-        new_labels = (
+        new_labels, new_stats = checkpoint_observed(
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("ncomp", F.col("comp"))).alias("comp"),
-                (F.coalesce("ncomp", F.col("comp")) < F.col("comp")).alias("_chg"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("_chg").cast("long")), F.lit(0)
-                ).alias("changed"),
-            )
-            .drop("_chg")
-            .localCheckpoint()
+            ),
+            label_sum,
         )
-        changed = int(obs.get["changed"])
+        release_checkpoint(labels)
         labels = new_labels
-        if changed == 0:
+        if new_stats["label_sum"] == stats["label_sum"]:
             break
+        stats = new_stats
+    release_checkpoint(edges)
     return labels
 
 

@@ -1,10 +1,13 @@
-"""Iterative graph algorithms on DataFrames: PageRank.
+"""Graph algorithms on DataFrames: PageRank, k-core peeling and the
+triangle census.
 
-The engine already runs one fixed-point graph algorithm distributed
-(connected components, llmdata/dedup.py); PageRank is the weighted
-cousin — the canonical "iterative joins on Spark" workload (e.g. link
-authority over a crawl graph when ranking training documents by source
-quality).
+PageRank is a fixed-count power iteration; k-core peeling (here),
+frontier BFS (queries/extras54.py) and connected components
+(llmdata/dedup.py) are fixpoint loops. Every fixpoint round is one
+``ops/observe.checkpoint_observed`` job: the round's frame is
+checkpointed and its convergence counts ride that same job. The loops
+run to their fixpoint; none has a round cap that could return a
+half-peeled or half-labeled result.
 
 Scale shape per iteration: ONE join of the rank vector to the edge list
 on src (both keyed by node id — with both sides pre-partitioned on the
@@ -31,8 +34,10 @@ grain and the 1e-9 test tolerances.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .observe import checkpoint_observed, release_checkpoint
 
 # 2^40 snap grid for shares/ranks (see module docstring). Mass <= 1 so
 # scaled values stay far below 2^52 and the power-of-two scale is exact.
@@ -85,13 +90,13 @@ def pagerank(
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
+    nodes, stats = checkpoint_observed(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        {"n": F.count(F.lit(1))},
     )
-    n_nodes = nodes.count()
+    n_nodes = int(stats["n"])
     if n_nodes == 0:
         return nodes.withColumn("rank", F.lit(0.0))
 
@@ -235,35 +240,31 @@ def k_core(
     k: int,
     a: str = "src",
     b: str = "dst",
-    max_iters: int = 50,
     pre_canonical: bool = False,
     materialize: bool = True,
     init_deg: DataFrame | None = None,
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int, int]:
     """Extract the k-core of an undirected graph: the (unique) maximal
     subgraph in which every node has degree >= k, by synchronous
     peeling (Matula & Beck 1983): each round drops EVERY node whose
     current in-subgraph degree is < k, until a fixpoint. The fixpoint
     is order-independent, so the result is deterministic regardless of
-    partitioning.
+    partitioning. Every round with a node below k removes at least one
+    node, so the loop ends after at most |V| rounds; it has no cap.
 
-    Distributed shape (delta-degree peel, round-13 rework): the edge
-    list is canonicalized and ``localCheckpoint``-ed ONCE and never
-    rewritten; per round the engine touches only NODE-GRAIN frames —
-    filter current degrees for the peel set, join the static edge list
-    to that (small, AQE-broadcastable) peel set to count each
-    survivor's lost neighbors, and subtract. The round-12 formulation
-    instead re-aggregated degrees from — and re-materialized — the
-    full EDGE list every round (one O(E) shuffle + one O(E)
-    checkpoint write per round), which measured 4.13x wall at 10x
-    data (STRESS_r12); moving the per-round shuffle + materialization
-    from edge grain to node grain is what removes that term. The
-    number of rounds is bounded by the graph's degeneracy ordering
-    depth (single digits on co-occurrence graphs), never by node
-    count, and is invariant to partitioning. Returns (surviving
-    undirected edge list, rounds run, surviving node count — every
-    alive node has degree > 0, so the count of the final degree table
-    IS the core's node count, saving callers a distinct-count job).
+    Distributed shape (delta-degree peel): the edge list is
+    canonicalized and ``localCheckpoint``-ed ONCE and never rewritten;
+    per round the engine touches only NODE-GRAIN frames — filter
+    current degrees for the peel set, join the static edge list to that
+    (small, broadcast) peel set to count each survivor's lost
+    neighbors, and subtract. Re-aggregating degrees from the full edge
+    list each round would add one O(E) shuffle and one O(E) checkpoint
+    write per round. The number of rounds is the graph's peel depth
+    (single digits on co-occurrence graphs; |V|/2 on a path), and is
+    invariant to partitioning. Returns (surviving undirected edge list,
+    rounds run, surviving node count — every alive node has degree > 0,
+    so the count of the final degree table IS the core's node count,
+    saving callers a distinct-count job).
 
     Equivalence to the edge-rewrite peel (what keeps the DuckDB
     recursive-CTE oracle unchanged): a surviving node's in-subgraph
@@ -286,23 +287,14 @@ def k_core(
     the input is already checkpoint/cache-backed (a lazy edge plan
     would otherwise re-execute once per peel round).
 
-    Round-14 job-cadence rework (guide §7.3 — driver-side actions are
-    the iterative-op cost floor): each round materializes the updated
-    degree table ONCE (a ``localCheckpoint``) and reads the fixpoint
-    test (n_alive, n_bad) from an ``observe`` metric collected by that
-    same job — one driver action per round total. The previous shape checkpointed ``bad`` (one job, which on
-    un-checkpointed rounds re-executed the whole update chain), counted
-    it (another), and checkpointed ``deg`` every other round (a third,
-    executing the update chain a SECOND time). ``bad`` is now a plain
-    filter over the checkpointed degree table. The checkpoint (not a
-    bare ``persist``) is load-bearing for the DRIVER, not just the
-    executors: each round's logical plan references the previous degree
-    table four times (three ``bad`` joins + the update), so an
-    RDD-backed truncation is what keeps analysis cost linear in rounds
-    — a persist-only variant was measured to blow up the analyzer
-    exponentially (4^rounds logical tree) by the second nested peel.
-    Results are identical — same update expression, same round
-    boundaries, same ``d > 0`` drop rule.
+    Each round is one ``checkpoint_observed`` job: it materializes the
+    updated degree table and returns the fixpoint test (alive, nbad)
+    from the same job. ``bad`` is a plain filter over the checkpointed
+    table. Each round's plan references the previous degree table four
+    times (three ``bad`` joins + the update), so the checkpoint's plan
+    truncation keeps analysis cost linear in rounds. The previous
+    round's table is released once the next one exists; a caller's
+    ``init_deg`` is never released.
     """
     if pre_canonical:
         e = edges.select(F.col(a).alias("lo"), F.col(b).alias("hi"))
@@ -318,21 +310,10 @@ def k_core(
             .distinct()
             .localCheckpoint()
         )
-    # Fixpoint stats ride the SAME job that materializes each round's
-    # degree table (an ``observe`` CollectMetrics node under the
-    # checkpoint) instead of a separate collect over the cached rows —
-    # one driver action per round, not two. 18 rounds at sf0.1 measured
-    # 9.00 -> 8.07 s min-of-3 interleaved for the full decomposition;
-    # values are the identical aggregates, read from the execution's
-    # metrics instead of a second scan. Fresh expression instances per
-    # observe (aliases must be unique within a plan's metrics).
-    def _fix_stats():
-        return [
-            F.count(F.lit(1)).alias("alive"),
-            F.coalesce(
-                F.sum((F.col("d") < k).cast("long")), F.lit(0)
-            ).alias("nbad"),
-        ]
+    fix_stats = {
+        "alive": F.count(F.lit(1)),
+        "nbad": F.coalesce(F.sum((F.col("d") < k).cast("long")), F.lit(0)),
+    }
 
     if init_deg is not None:
         # caller-supplied (n, d) degree table of the SAME edge list,
@@ -340,22 +321,17 @@ def k_core(
         # pass computes it anyway; recomputing it here would be a pure
         # duplicate job (its stats are one tiny cached-scan aggregate)
         deg = init_deg
-        stats = deg.agg(*_fix_stats()).collect()[0]
+        stats = deg.agg(*(c.alias(n) for n, c in fix_stats.items())).collect()[0]
     else:
-        # obs0.get blocks until an action runs: the eager localCheckpoint
-        # must stay the first action on the observed frame
-        obs0 = Observation()
-        deg = (
+        deg, stats = checkpoint_observed(
             e.select(F.col("lo").alias("n"))
             .unionAll(e.select(F.col("hi").alias("n")))
             .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .observe(obs0, *_fix_stats())
-            .localCheckpoint()
+            .agg(F.count(F.lit(1)).alias("d")),
+            fix_stats,
         )
-        stats = obs0.get
     rounds = 0
-    while int(stats["nbad"]) > 0 and rounds < max_iters:
+    while int(stats["nbad"]) > 0:
         n_bad = int(stats["nbad"])
         # node-grain peel list: a plain filter over the CHECKPOINTED
         # degree table (each reference is a cached-scan filter; the
@@ -374,9 +350,8 @@ def k_core(
         # max(d) recovers the survivor's degree (exactly one non-null d
         # per key), sum(l) counts its lost neighbors — each edge to a
         # peeled node is counted once, in the round its other endpoint
-        # dies, exactly as the previous join formulation; keys with a
-        # NULL max(d) are loss events for nodes peeled this same round
-        # and are dropped, as the anti-join/filter dropped them.
+        # dies; keys with a NULL max(d) are loss events for nodes
+        # peeled this same round and are dropped.
         surv = deg.filter(F.col("d") >= k).select(
             "n", "d", F.lit(0).alias("l")
         )
@@ -389,22 +364,18 @@ def k_core(
             )
             .select("n", F.lit(None).cast("long").alias("d"), F.lit(1).alias("l"))
         )
-        # obs.get blocks until an action runs: the eager localCheckpoint
-        # must stay the first action on the observed frame
-        obs = Observation()
-        deg = (
+        prev = deg
+        deg, stats = checkpoint_observed(
             surv.unionAll(hits)
             .groupBy("n")
             .agg(F.max("d").alias("d0"), F.sum("l").alias("lost"))
             .filter(F.col("d0").isNotNull())
             .select("n", (F.col("d0") - F.col("lost")).alias("d"))
-            .filter(F.col("d") > 0)
-            .observe(obs, *_fix_stats())
-            .localCheckpoint()
+            .filter(F.col("d") > 0),
+            fix_stats,
         )
-        # the fixpoint test and alive count come back with the
-        # checkpoint job's metrics — no second job per round
-        stats = obs.get
+        if prev is not init_deg:
+            release_checkpoint(prev)
         rounds += 1
     n_alive = int(stats["alive"])
     alive_lo = deg.select(F.col("n").alias("_alo"))

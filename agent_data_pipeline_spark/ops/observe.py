@@ -10,6 +10,10 @@ row counts / violation counts / sums, for free, exactly once per action.
 
 This is the "audit column" pattern of lakehouse writers (Delta's metrics,
 Iceberg's snapshot summaries) expressed with the engine primitive.
+
+This is the one module that builds an ``Observation``: writes observe
+through ``observed``/``write_parquet_validated``, and fixpoint rounds
+through ``checkpoint_observed`` (tests/test_readme_counts.py pins it).
 """
 
 from __future__ import annotations
@@ -36,6 +40,35 @@ def observed(
     for name, col in metrics.items():
         names_cols.append(col.alias(name))
     return df.observe(obs, *names_cols), obs
+
+
+def checkpoint_observed(
+    df: DataFrame, metrics: dict[str, Column]
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with an eager ``localCheckpoint`` and return it
+    with the values of ``metrics`` computed by that same job: the round
+    primitive of every fixpoint loop (k-core peel, BFS hop, connected
+    components), one driver action per round.
+
+    Ordering rule: ``Observation.get`` blocks until an action runs on
+    the observed frame, so the checkpoint must be that frame's first
+    action. Keeping both steps here is what keeps them in that order.
+
+    The checkpoint (not a bare ``persist``) truncates the logical plan:
+    a round that references the previous round's frame several times
+    would otherwise grow the tree geometrically and the analyzer with
+    it.
+    """
+    obs_df, obs = observed(df, metrics)
+    frame = obs_df.localCheckpoint()
+    return frame, dict(obs.get)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the cached blocks behind a ``localCheckpoint`` frame. Only
+    for a frame nothing lazy still reads: a later checkpoint built from
+    it is safe, a plan that scans it fails."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def write_parquet_validated(

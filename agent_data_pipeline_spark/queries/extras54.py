@@ -26,9 +26,10 @@ Reference parity: no graph surface in the reference (SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops.observe import checkpoint_observed
 from .core import QuerySpec, duck_materialize, bounded_collect, rnd, t
 
 
@@ -134,20 +135,22 @@ def bfs_hops(
     edges: DataFrame, seed: int, max_hops: int = 30
 ) -> DataFrame:
     """Frontier BFS over an undirected canonical edge list (lo, hi).
-    Returns (node, hop). One equi-join + anti-join per round; rounds
-    bounded by the diameter.
+    Returns (node, hop). One equi-join + anti-join per round; the loop
+    stops at an empty frontier or after ``max_hops`` rounds. The hop
+    cap is part of the query's meaning (its oracle walk stops at the
+    same hop), not a safety cap.
 
-    Round-14 shape: the frontier and visited sets are NODE-grain and
-    their exact sizes are known from the previous round's count, so
-    both joins carry an exact-decision broadcast hint (checkpoint-backed
-    frames report default huge size stats — without the hint every
-    round planned a sort-merge join that shuffled the full symmetric
-    edge list). ONE driver action per round: the new frontier is
-    checkpointed with its size riding the same job as an ``observe``
-    metric (the k_core pattern — a separate count per hop was a second
-    job over cached rows); `visited` stays a lazy union of checkpointed
-    per-hop frames (depth = diameter, each leaf cached) instead of
-    being re-checkpointed — re-copied — every round.
+    The frontier and visited sets are NODE-grain and their exact sizes
+    are known from the previous round's count, so both joins carry an
+    exact-decision broadcast hint (checkpoint-backed frames report
+    default huge size stats — without the hint every round planned a
+    sort-merge join that shuffled the full symmetric edge list). ONE
+    driver action per round: the new frontier is a
+    ``checkpoint_observed`` job whose size rides that same job;
+    `visited` stays a lazy union of the checkpointed per-hop frames
+    (depth = diameter, each leaf cached) instead of being
+    re-checkpointed — re-copied — every round, so the per-hop frames
+    are the result and are never released here.
     """
     spark = edges.sparkSession
     from ..ops.graph import _BROADCAST_NODE_CAP
@@ -169,19 +172,15 @@ def bfs_hops(
         seen = visited.select("node")
         if n_visited <= _BROADCAST_NODE_CAP:
             seen = F.broadcast(seen)
-        # obs.get blocks until an action runs: the eager localCheckpoint
-        # must stay the first action on the observed frame
-        obs = Observation()
-        nxt = (
+        nxt, stats = checkpoint_observed(
             sym.join(f, "u")
             .select(F.col("v").alias("node"))
             .distinct()
             .join(seen, "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .withColumn("hop", F.lit(h)),
+            {"n": F.count(F.lit(1))},
         )
-        n_frontier = int(obs.get["n"])
+        n_frontier = int(stats["n"])
         if n_frontier == 0:
             break
         visited = visited.unionAll(nxt)
@@ -193,21 +192,20 @@ def bfs_hops(
 def _bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _copurchase_edges(spark, sf_dir).localCheckpoint()
     # the degree table IS the distinct-node enumeration (one row per
-    # node) — materialize it once so the hub lookup reads cached rows
-    # and the node count is a trivial count of the same cache, instead
-    # of a second full union+distinct aggregation over the edge list
-    deg = (
+    # node) — materialize it once so the hub lookup reads cached rows;
+    # the node count rides the same checkpoint job
+    deg, stats = checkpoint_observed(
         e.select(F.col("lo").alias("n"))
         .unionAll(e.select(F.col("hi").alias("n")))
         .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("d")),
+        {"n_nodes": F.count(F.lit(1))},
     )
     hub = deg.orderBy(F.col("d").desc(), F.col("n").asc()).limit(1).collect()[
         0
     ]["n"]
     visited = bfs_hops(e, int(hub))
-    n_nodes = deg.count()
+    n_nodes = int(stats["n_nodes"])
     hist = bounded_collect(
         visited.groupBy("hop")
         .agg(F.count(F.lit(1)).cast("long").alias("n_at_hop")),

@@ -25,7 +25,7 @@ from ..streaming import (
     stateful_running_agg,
     stream_parquet,
 )
-from .core import QuerySpec, events_schema, rnd, t, with_nanos_ts
+from .core import QuerySpec, bounded_collect, events_schema, rnd, t, with_nanos_ts
 
 
 def _tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,8 +258,9 @@ def _stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type totals -> foreachBatch parquet sink (complete mode, each
     micro-batch overwrites with the batch writer — the pattern that also
     carries JDBC/multi-sink fan-out) -> read the sunk files back. The
-    oracle checks what landed ON DISK, not a memory sink. The sink's
-    temporary directory is removed once the read-back is materialized."""
+    oracle checks what landed ON DISK, not a memory sink. The read-back
+    (one row per event type) is collected to a local frame, and the
+    sink's temporary directory is removed."""
     stream = _read_events_stream(spark, sf_dir)
     agged = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), rnd(F.sum("value"), 2).alias("sum_value")
@@ -271,8 +272,11 @@ def _stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 agged, f"{base}/out", f"{base}/ckpt", mode="overwrite", output_mode="complete"
             )
         )
-        # materialized before the directory it was read from goes
-        return read_parquet(spark, f"{base}/out").localCheckpoint()
+        # collected before the directory it was read from goes; a local
+        # frame holds no cached blocks, where a checkpoint would
+        back = read_parquet(spark, f"{base}/out")
+        rows = bounded_collect(back, 64, "one row per event type")
+        return spark.createDataFrame(rows, back.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -141,6 +141,44 @@ def test_k_core_cascade_collapses_ring_of_trees(spark):
     assert _reference_k_core(edges, 2) == set()
 
 
+def test_k_core_long_path_peels_to_empty(spark):
+    # each round peels only the two ends, so the empty 2-core of a
+    # 200-node path takes 100 rounds
+    edges = [(i, i + 1) for i in range(199)]
+    assert _reference_k_core(edges, 2) == set()
+    assert _core_edges(spark, edges, 2) == set()
+
+
+def _new_persisted_rdds(spark, run):
+    """Ids of persisted RDDs that exist after ``run()`` but not before,
+    with ``run``'s result still referenced."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    result = run()  # noqa: F841 — held while the ids are read
+    return set(jsc.getPersistentRDDs().keys()) - before
+
+
+@pytest.mark.parametrize("algo", ["connected_components", "k_core"])
+def test_fixpoint_loops_release_round_checkpoints(spark, algo):
+    """A fixpoint loop keeps only the checkpoints its result still
+    reads: the count it leaves behind does not grow with its rounds."""
+    from agent_data_pipeline_spark.llmdata.dedup import connected_components
+
+    def run(n):
+        path = [(i, i + 1) for i in range(n - 1)]
+        if algo == "connected_components":
+            df = spark.createDataFrame(path, "id_a bigint, id_b bigint")
+            out = connected_components(df)
+        else:
+            df = spark.createDataFrame(path, "src bigint, dst bigint")
+            out = k_core(df, 2)[0]
+        out.collect()
+        return out
+
+    short, long = (_new_persisted_rdds(spark, lambda: run(n)) for n in (6, 12))
+    assert len(short) == len(long) <= 2
+
+
 def test_k_core_self_loops_and_duplicates_ignored(spark):
     edges = [(1, 1), (1, 2), (2, 1), (1, 2), (2, 3), (3, 1)]
     assert _core_edges(spark, edges, 2) == {(1, 2), (1, 3), (2, 3)}

@@ -5,8 +5,9 @@ entry points at the sizes they run at, so the number of jobs each starts
 is pinned here: schema inference and evolution are driver-side metadata
 work (no job), the taxi pipeline is a one-row gate probe plus the
 observed write, and a parquet read learns its schema from a footer read
-on the driver (no job). Jobs are counted with a job group and the status
-tracker.
+on the driver (no job). Graph setups read their node counts from the
+checkpoint job that materializes the nodes (no separate count). Jobs are
+counted with a job group and the status tracker.
 """
 
 from __future__ import annotations
@@ -174,3 +175,22 @@ def test_read_events_leaves_conf_unchanged_and_runs_no_failed_job(spark, tmp_pat
         "2024-01-01 00:00:02.000002",
         "2024-01-01 00:00:03.000003",
     ]
+
+
+# A separate count() of a checkpointed node table costs two jobs under
+# AQE (the shuffle stage and the result); the count rides the checkpoint.
+def test_pagerank_job_count(spark):
+    from agent_data_pipeline_spark.ops.graph import pagerank
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
+    with _jobs(spark) as jobs:
+        pagerank(edges)
+    assert len(jobs) == 44
+
+
+def test_bfs_hops_from_hub_job_count(spark, sf_smoke):
+    from agent_data_pipeline_spark.queries.extras54 import _bfs_hops_from_hub
+
+    with _jobs(spark) as jobs:
+        _bfs_hops_from_hub(spark, sf_smoke)
+    assert len(jobs) == 22

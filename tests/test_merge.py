@@ -5,6 +5,10 @@ contract deliberately diverges from SQL NOT IN here)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
+
 from agent_data_pipeline_spark.ops.merge import upsert
 
 
@@ -31,19 +35,37 @@ def test_upsert_empty_delta_is_identity(spark):
     assert _rows(upsert(base, delta, ["k"])) == [(1, "a"), (2, "b")]
 
 
-def test_connected_components_chain_transitivity(spark):
+def _path(ids):
+    return [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+
+
+_PERMUTED_64 = random.Random(64).sample(range(64), 64)
+
+
+@pytest.mark.parametrize(
+    "pairs, expected",
+    [
+        (
+            [(1, 2), (2, 3), (10, 11)],
+            {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)},
+        ),
+        # the min label needs 50 rounds to cross an in-order chain
+        (_path(list(range(51))), {(n, 0) for n in range(51)}),
+        (_path(_PERMUTED_64), {(n, 0) for n in range(64)}),
+    ],
+    ids=["hand", "chain_51", "permuted_path_64"],
+)
+def test_connected_components_chain_transitivity(spark, pairs, expected):
     """a-b and b-c near-dup pairs (no a-c edge) must land in ONE
     component labeled by the min id — the transitive case greedy
-    pairwise dedup mislabels. Plus: two disjoint pairs stay separate."""
+    pairwise dedup mislabels. Plus: two disjoint pairs stay separate,
+    and chains of edited copies longer than any round budget still
+    resolve to one component."""
     from agent_data_pipeline_spark.llmdata.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    got = {
-        (r["node"], r["comp"]) for r in connected_components(pairs).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
+    got = {(r["node"], r["comp"]) for r in connected_components(df).collect()}
+    assert got == expected
 
 
 def test_scd2_close_insert_noop_newkey_history(spark):

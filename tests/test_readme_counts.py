@@ -47,3 +47,26 @@ def test_docstring_test_citations_exist():
             if not (root / cited).exists():
                 stale.append(f"{src.relative_to(root)} cites missing {cited}")
     assert not stale, "\n".join(stale)
+
+
+def test_one_primitive_per_pattern():
+    """Two engine patterns each live in one module: building an
+    ``Observation`` (ops/observe.py — the fixpoint rounds go through
+    its ``checkpoint_observed``, which owns the checkpoint-first
+    ordering rule) and reading a Parquet file (io/sources.py, whose
+    footer read supplies the schema). Swept mechanically so a
+    hand-built copy cannot creep back in."""
+    pkg = README.parent / "agent_data_pipeline_spark"
+    rules = {
+        "Observation(": "ops/observe.py",
+        ".observe(": "ops/observe.py",
+        "spark.read.parquet(": "io/sources.py",
+    }
+    stray = []
+    for src in pkg.rglob("*.py"):
+        rel = src.relative_to(pkg).as_posix()
+        text = src.read_text()
+        for needle, home in rules.items():
+            if needle in text and rel != home:
+                stray.append(f"{rel} uses {needle} (only {home} may)")
+    assert not stray, "\n".join(stray)

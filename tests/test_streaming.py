@@ -440,16 +440,22 @@ def test_stream_cdc_dimension_maintenance(spark, tmp_path):
 def test_stream_queries_leave_no_views_or_queries(spark, sf_smoke):
     """Every ``stream_*`` registry query drains into a sink and returns
     a frame that stays readable, without leaving the sink's temp view
-    in the session catalog or a query running."""
+    in the session catalog, a query running, or cached blocks held by
+    the returned frame."""
     from agent_data_pipeline_spark.queries import REGISTRY
 
     names = [n for n in REGISTRY if n.startswith("stream_")]
     assert len(names) == 11
+    jsc = spark.sparkContext._jsc
     before = sorted(tbl.name for tbl in spark.catalog.listTables())
+    rdds_before = set(jsc.getPersistentRDDs().keys())
+    frames = []  # held, so a frame's blocks cannot be cleaned up early
     for name in names:
-        assert REGISTRY[name].spark(spark, sf_smoke).collect(), name
+        frames.append(REGISTRY[name].spark(spark, sf_smoke))
+        assert frames[-1].collect(), name
     assert sorted(tbl.name for tbl in spark.catalog.listTables()) == before
     assert spark.streams.active == []
+    assert set(jsc.getPersistentRDDs().keys()) - rdds_before == set()
 
 
 def test_foreachbatch_totals_leaves_no_temp_dir(spark, sf_smoke):
