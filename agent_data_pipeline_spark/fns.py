@@ -331,53 +331,25 @@ def assert_grid_headroom(
         )
 
 
-# --- tracked dim-grain persists (ADVICE r9: persist-leak hygiene) ----
-#
-# Several rank/rollup queries persist a small dim-grain aggregate so a
-# bounded side job and the returned plan share ONE fact shuffle
-# (the checkpoint-the-dim idiom — extras14 rfm, extras25 rrf,
-# temporal gap-fill, ops.timeseries rollup levels). The frame cannot
-# be unpersisted inside the query function: the returned plan still
-# references it lazily, and an eager unpersist would re-shuffle the
-# fact table at execution time, undoing the rework's one-shuffle
-# guarantee. Instead every such persist registers here, and any
-# harness that runs MANY registry queries in one session (the oracle
-# differential, bench, stress, the external driver) calls
-# ``release_persists()`` after materializing each query's result.
-# A session that never calls it leaks only dim-grain frames
-# (customer/bucket grain, ~O(10k rows) each) for the session
-# lifetime, bounded and eventually reclaimed by Spark's
-# ContextCleaner once the plans are garbage-collected.
-_SESSION_PERSISTS: list = []
-
-
-def persist_dim(df, grain: str):
-    """Persist a dim-grain frame and track it for release_persists().
-
-    ``grain`` documents why the frame is small enough to cache
-    (mirrors bounded_collect's ``why``); it is carried for error
-    messages and audit greps, not enforced — persist is storage, not a
-    driver materialization.
-    """
-    out = df.persist()
-    _SESSION_PERSISTS.append((out, grain))
-    return out
-
-
 def release_persists() -> int:
-    """Unpersist every tracked dim-grain frame; returns the count.
+    """Drop every cached relation and persisted RDD of the active session;
+    returns the number of RDDs unpersisted.
 
-    Safe to call at any time: the frames' lineage is intact, so a plan
-    still holding one simply recomputes it (dim-grain, one shuffle).
-    Harnesses call this AFTER materializing a query's result, where
-    recomputation can no longer occur.
+    Spark records what a query left behind (the CacheManager for
+    ``.cache()``/``.persist()`` frames, ``getPersistentRDDs`` for their
+    blocks and for ``localCheckpoint`` frames), so the sweep reads those
+    records instead of a list of its own. Call it only after every frame
+    built before it has been materialized or dropped: a released cache is
+    recomputed, but a lazy plan that still scans a released checkpoint
+    fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     """
-    n = 0
-    while _SESSION_PERSISTS:
-        df, _grain = _SESSION_PERSISTS.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-        n += 1
-    return n
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return 0
+    sc._jvm.SparkSession.active().catalog().clearCache()
+    rdds = sc._jsc.getPersistentRDDs()
+    for rdd in list(rdds.values()):
+        rdd.unpersist()
+    return len(rdds)

@@ -59,7 +59,6 @@ def hypertable_rollup(
     widths: list[str],
     keys: list[str],
     value_col: str,
-    cache_levels: bool = False,
 ) -> DataFrame:
     """Multi-resolution rollup: one row set per width in ``widths``
     (ascending, each width an integer multiple of the previous so the
@@ -67,18 +66,13 @@ def hypertable_rollup(
 
     Level 0 scans the raw table; level i>0 re-aggregates level i-1 —
     the continuous-aggregate pattern: the expensive scan is paid once.
-    BUT lazy lineage alone does not deliver that: each level's plan
-    would re-execute the finer level (three raw scans for three
-    widths). ``cache_levels=True`` persists each level before deriving
-    the next, making the raw scan happen once — the in-memory analog of
-    the production shape, which WRITES each level to its own table and
-    derives the next from the stored one (see `io/tables.py`).
+    Lazy lineage alone does not deliver that: each level's plan would
+    re-execute the finer level (three raw scans for three widths), so
+    each level is persisted before the next is derived — the in-memory
+    analog of the production shape, which WRITES each level to its own
+    table and derives the next from the stored one (see `io/tables.py`).
     """
-    from ..fns import persist_dim
-
-    base = bucket_agg(df, ts_col, widths[0], keys, value_col)
-    if cache_levels:
-        base = persist_dim(base, f"rollup level {widths[0]} (bucket grain)")
+    base = bucket_agg(df, ts_col, widths[0], keys, value_col).persist()
     out = base.withColumn("bucket_width", F.lit(widths[0]))
     prev = base
     for width in widths[1:]:
@@ -89,9 +83,7 @@ def hypertable_rollup(
             F.sum("sum_value").alias("sum_value"),
             F.min("min_value").alias("min_value"),
             F.max("max_value").alias("max_value"),
-        )
-        if cache_levels:
-            lvl = persist_dim(lvl, f"rollup level {width} (bucket grain)")
+        ).persist()
         out = out.unionByName(lvl.withColumn("bucket_width", F.lit(width)))
         prev = lvl
     return out

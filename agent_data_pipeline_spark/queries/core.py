@@ -80,6 +80,17 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_events(spark, path) if name == "events" else read_parquet(spark, path)
 
 
+def named_tables(sql: str) -> str:
+    """``sql`` with each ``{table}`` placeholder spelled as the table name
+    itself: the text the DuckDB oracle runs over its fixture views.
+    ``spark.sql(sql, table=frame)`` binds the same placeholders to frames
+    under fresh view names, which it drops once the text is analyzed, so
+    no view of the caller's is replaced. The drop uncaches the view's
+    plan: a cache the caller holds on the identical fixture scan is
+    dropped too, and recomputed when next read."""
+    return _re.sub(r"\{(\w+)\}", r"\1", sql)
+
+
 def events_schema(spark: SparkSession, path: str) -> tuple[T.StructType, bool]:
     """``(schema, ts_is_long)`` of the events parquet at ``path``. The
     footer is converted with TIMESTAMP(NANOS) mapped to ``long`` (on a

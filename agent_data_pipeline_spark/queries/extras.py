@@ -20,22 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import QuerySpec, rnd, t
-
-
-def _register(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for name in names:
-        t(spark, sf_dir, name).createOrReplaceTempView(name)
+from .core import QuerySpec, named_tables, rnd, t
 
 
 # --- EXISTS / NOT EXISTS ----------------------------------------------------
 
 _EXISTS_SQL = """
 SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_cust
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
+FROM {customer} c
+WHERE EXISTS (SELECT 1 FROM {orders} o
               WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-  AND NOT EXISTS (SELECT 1 FROM orders o2
+  AND NOT EXISTS (SELECT 1 FROM {orders} o2
                   WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'P')
 GROUP BY c_nationkey
 """
@@ -46,17 +41,18 @@ def _exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     them to left-semi / left-anti hash joins (RewritePredicateSubquery),
     so at scale this is two shuffled joins on o_custkey — not N
     re-executions of the inner query."""
-    _register(spark, sf_dir, "customer", "orders")
-    return spark.sql(_EXISTS_SQL)
+    return spark.sql(
+        _EXISTS_SQL, customer=t(spark, sf_dir, "customer"), orders=t(spark, sf_dir, "orders")
+    )
 
 
 # --- IN / NOT IN subqueries -------------------------------------------------
 
 _IN_SQL = """
 SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts
-FROM part
-WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 49)
-  AND p_partkey NOT IN (SELECT l_partkey FROM lineitem
+FROM {part}
+WHERE p_partkey IN (SELECT l_partkey FROM {lineitem} WHERE l_quantity >= 49)
+  AND p_partkey NOT IN (SELECT l_partkey FROM {lineitem}
                         WHERE l_discount >= 0.10 AND l_partkey IS NOT NULL)
 GROUP BY p_brand
 """
@@ -68,16 +64,17 @@ def _in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join plan (a nullable NOT IN subquery forces the expensive
     null-aware variant) and pins identical three-valued-logic semantics
     on both engines."""
-    _register(spark, sf_dir, "part", "lineitem")
-    return spark.sql(_IN_SQL)
+    return spark.sql(
+        _IN_SQL, part=t(spark, sf_dir, "part"), lineitem=t(spark, sf_dir, "lineitem")
+    )
 
 
 # --- LATERAL correlated subquery -------------------------------------------
 
 _LATERAL_SQL = """
 SELECT n_name, l.c_name, l.c_acctbal
-FROM nation, LATERAL (
-  SELECT c_name, c_acctbal FROM customer
+FROM {nation}, LATERAL (
+  SELECT c_name, c_acctbal FROM {customer}
   WHERE c_nationkey = n_nationkey
   ORDER BY c_acctbal DESC, c_custkey
   LIMIT 2) l
@@ -91,8 +88,9 @@ def _lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LATERAL spelling is front-end surface, not a nested-loop
     execution commitment. Tie-broken by c_custkey so the 2 rows are
     deterministic."""
-    _register(spark, sf_dir, "nation", "customer")
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL, nation=t(spark, sf_dir, "nation"), customer=t(spark, sf_dir, "customer")
+    )
 
 
 # --- Recursive CTE ----------------------------------------------------------
@@ -109,7 +107,7 @@ months AS (
 SELECT CAST(mon AS STRING) AS mon,
        CAST(count(o_orderkey) AS BIGINT) AS n_orders,
        floor(coalesce(sum(o_totalprice), 0) * 100 + 0.5) / 100 AS sum_price
-FROM months LEFT JOIN orders
+FROM months LEFT JOIN {orders}
   ON CAST(date_trunc('month', o_orderdate) AS DATE) = mon
 GROUP BY mon
 """
@@ -124,8 +122,7 @@ def _recursive_cte_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. The recursion is driver-bounded (24 iterations over one row);
     the fact scan happens once, so the plan is calendar-broadcast +
     single aggregated scan at any scale."""
-    _register(spark, sf_dir, "orders")
-    return spark.sql(_RECURSIVE_SQL)
+    return spark.sql(_RECURSIVE_SQL, orders=t(spark, sf_dir, "orders"))
 
 
 # --- Inline VALUES dimension (decode-as-join) -------------------------------
@@ -368,12 +365,15 @@ def _variant_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES: dict[str, QuerySpec] = {
     "exists_subquery": QuerySpec(
-        _exists_subquery, _EXISTS_SQL, "EXISTS / NOT EXISTS -> semi/anti join"
+        _exists_subquery, named_tables(_EXISTS_SQL), "EXISTS / NOT EXISTS -> semi/anti join"
     ),
-    "in_subquery": QuerySpec(_in_subquery, _IN_SQL, "IN / NOT IN subqueries"),
-    "lateral_topk": QuerySpec(_lateral_topk, _LATERAL_SQL, "LATERAL correlated top-2"),
+    "in_subquery": QuerySpec(_in_subquery, named_tables(_IN_SQL), "IN / NOT IN subqueries"),
+    "lateral_topk": QuerySpec(
+        _lateral_topk, named_tables(_LATERAL_SQL), "LATERAL correlated top-2"
+    ),
     "recursive_cte_months": QuerySpec(
-        _recursive_cte_months, _RECURSIVE_SQL, "WITH RECURSIVE calendar spine + left join"
+        _recursive_cte_months, named_tables(_RECURSIVE_SQL),
+        "WITH RECURSIVE calendar spine + left join"
     ),
     "values_decode_join": QuerySpec(
         _values_decode_join, _VALUES_DECODE_SQL, "inline VALUES dim broadcast decode"

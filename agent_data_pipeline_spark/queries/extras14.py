@@ -81,12 +81,8 @@ def _rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One fact shuffle total: the customer-dim aggregate feeds the
     # boundary side job (histogram + refine) AND the scoring pass —
     # persist it so orders is scanned/aggregated once, not three times
-    # (at cluster scale this is the checkpoint-the-dim idiom). Tracked
-    # via fns.persist_dim so long-running harnesses can release it
-    # after materialization (ADVICE r9).
-    from ..fns import persist_dim
-
-    per = persist_dim(per, "customer-dim RFM aggregate (~|customers| rows)")
+    # (at cluster scale this is the checkpoint-the-dim idiom).
+    per = per.persist()
     # --- bounded side job: locate the 12 ntile(5) boundary pairs -----
     longf = per.select(
         F.col("o_custkey").alias("ck"),

@@ -144,11 +144,8 @@ def _rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One fact shuffle total: the customer-dim aggregate feeds the
     # histogram side job, the candidate filter, and both in-bucket
-    # better-count branches — persist it (checkpoint-the-dim idiom),
-    # tracked via fns.persist_dim for harness-side release (ADVICE r9).
-    from ..fns import persist_dim
-
-    per = persist_dim(per, "customer-dim revenue/orders aggregate")
+    # better-count branches — persist it (checkpoint-the-dim idiom).
+    per = per.persist()
     # --- bounded side job: bucket histogram + rank-100 boundaries ----
     # keys are NEGATED so ascending (key, ck) = (metric desc, ck asc)
     longf = per.select(

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.sources import read_parquet
-from .core import QuerySpec, rnd, t
+from .core import QuerySpec, named_tables, rnd, t
 
 _IO_TMP = "/tmp/adps_io"
 
@@ -34,7 +34,7 @@ _GROUP_BY_ALL_SQL = """
 SELECT l_returnflag, l_linestatus,
        CAST(count(*) AS BIGINT) AS n_rows,
        floor(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty
-FROM lineitem
+FROM {lineitem}
 GROUP BY ALL
 ORDER BY ALL
 """
@@ -44,17 +44,16 @@ def _group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL resolution: grouping keys inferred
     from the non-aggregate select list, ordering over the full output
     row — identical sugar in Spark 3.4+ and DuckDB."""
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_GROUP_BY_ALL_SQL)
+    return spark.sql(_GROUP_BY_ALL_SQL, lineitem=t(spark, sf_dir, "lineitem"))
 
 
 # --- NATURAL JOIN + JOIN USING ---------------------------------------------
 
 _NATURAL_USING_SQL = """
-WITH n AS (SELECT n_nationkey AS nationkey, n_name, n_regionkey AS regionkey FROM nation),
-     r AS (SELECT r_regionkey AS regionkey, r_name FROM region),
+WITH n AS (SELECT n_nationkey AS nationkey, n_name, n_regionkey AS regionkey FROM {nation}),
+     r AS (SELECT r_regionkey AS regionkey, r_name FROM {region}),
      c AS (SELECT c_nationkey AS nationkey, CAST(count(*) AS BIGINT) AS n_cust
-           FROM customer GROUP BY c_nationkey)
+           FROM {customer} GROUP BY c_nationkey)
 SELECT r_name, n_name, n_cust
 FROM n NATURAL JOIN r JOIN c USING (nationkey)
 """
@@ -65,9 +64,9 @@ def _natural_using_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN USING (explicit shared-key list) — both resolve to ordinary
     equi-joins in Catalyst; the surface is name resolution, not a new
     physical strategy."""
-    for name in ("nation", "region", "customer"):
-        t(spark, sf_dir, name).createOrReplaceTempView(name)
-    return spark.sql(_NATURAL_USING_SQL)
+    return spark.sql(
+        _NATURAL_USING_SQL, **{n: t(spark, sf_dir, n) for n in ("nation", "region", "customer")}
+    )
 
 
 # --- FILTER-clause aggregates ----------------------------------------------
@@ -80,7 +79,7 @@ SELECT l_returnflag,
              * 100 + 0.5) / 100                                    AS disc_rev,
        floor(coalesce(avg(l_quantity) FILTER (WHERE l_linestatus = 'F'), 0)
              * 10000 + 0.5) / 10000                                AS avg_qty_f
-FROM lineitem
+FROM {lineitem}
 GROUP BY l_returnflag
 """
 
@@ -89,8 +88,7 @@ def _filtered_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-aggregate FILTER (WHERE ...) clauses — one scan computing
     differently-predicated aggregates side by side (the conditional-sum
     pattern without CASE-NULL scaffolding)."""
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_FILTERED_AGGS_SQL)
+    return spark.sql(_FILTERED_AGGS_SQL, lineitem=t(spark, sf_dir, "lineitem"))
 
 
 # --- Partition-pruned read --------------------------------------------------
@@ -275,11 +273,15 @@ def _arrow_udf_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES: dict[str, QuerySpec] = {
-    "group_by_all": QuerySpec(_group_by_all, _GROUP_BY_ALL_SQL, "GROUP BY ALL / ORDER BY ALL"),
-    "natural_using_join": QuerySpec(
-        _natural_using_join, _NATURAL_USING_SQL, "NATURAL JOIN + JOIN USING"
+    "group_by_all": QuerySpec(
+        _group_by_all, named_tables(_GROUP_BY_ALL_SQL), "GROUP BY ALL / ORDER BY ALL"
     ),
-    "filtered_aggs": QuerySpec(_filtered_aggs, _FILTERED_AGGS_SQL, "FILTER-clause aggregates"),
+    "natural_using_join": QuerySpec(
+        _natural_using_join, named_tables(_NATURAL_USING_SQL), "NATURAL JOIN + JOIN USING"
+    ),
+    "filtered_aggs": QuerySpec(
+        _filtered_aggs, named_tables(_FILTERED_AGGS_SQL), "FILTER-clause aggregates"
+    ),
     "partition_prune_agg": QuerySpec(
         _partition_prune_agg, _PARTITION_PRUNE_SQL, "date-partitioned layout + pruned scan"
     ),

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .core import QuerySpec, rnd, t
+from .core import QuerySpec, named_tables, rnd, t
 
 # --------------------------------------------------------------------------
 # Aggregation
@@ -156,23 +156,14 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 
 def _grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               floor((sum(l_extendedprice)) * 100 + 0.5) / 100 AS sum_price,
-               count(*)                       AS n_rows
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL, lineitem=t(spark, sf_dir, "lineitem"))
 
 
 _GROUPING_SETS_SQL = """
 SELECT l_returnflag, l_linestatus,
        floor((sum(l_extendedprice)) * 100 + 0.5) / 100 AS sum_price,
        count(*)                       AS n_rows
-FROM lineitem
+FROM {lineitem}
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """
 
@@ -841,24 +832,9 @@ def _sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped query over registered temp views, exercising multi-way join +
     agg + deterministic top-k entirely through SQL text. Catalyst plans
     it identically to the DataFrame API — one engine, two front ends."""
-    for name in ("customer", "orders", "lineitem"):
-        t(spark, sf_dir, name).createOrReplaceTempView(f"adps_{name}")
     return spark.sql(
-        """
-        SELECT o_orderkey,
-               floor(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100
-                 AS revenue,
-               o_orderdate, o_orderpriority
-        FROM adps_customer
-        JOIN adps_orders   ON c_custkey = o_custkey
-        JOIN adps_lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
-          AND l_shipdate  > TIMESTAMP '1997-06-01 00:00:00'
-        GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderkey
-        LIMIT 10
-        """
+        _SQL_SHIPPING_PRIORITY_SQL,
+        **{n: t(spark, sf_dir, n) for n in ("customer", "orders", "lineitem")},
     )
 
 
@@ -866,9 +842,9 @@ _SQL_SHIPPING_PRIORITY_SQL = """
 SELECT o_orderkey,
        floor(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) / 100 AS revenue,
        o_orderdate, o_orderpriority
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
+FROM {customer}
+JOIN {orders}   ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
 WHERE c_mktsegment = 'BUILDING'
   AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
   AND l_shipdate  > TIMESTAMP '1997-06-01 00:00:00'
@@ -1395,15 +1371,14 @@ def _above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates it into an aggregate + join (no per-row re-execution);
     the oracle runs the identical text. The subquery average is rounded
     on both sides so the filter threshold cannot straddle a ulp."""
-    t(spark, sf_dir, "customer").createOrReplaceTempView("adps_sub_customer")
-    return spark.sql(_ABOVE_NATION_AVG_SQL.replace("customer", "adps_sub_customer"))
+    return spark.sql(_ABOVE_NATION_AVG_SQL, customer=t(spark, sf_dir, "customer"))
 
 
 _ABOVE_NATION_AVG_SQL = """
 SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_above
-FROM customer c
+FROM {customer} c
 WHERE c_acctbal > (SELECT floor(avg(c2.c_acctbal) * 100 + 0.5) / 100
-                   FROM customer c2
+                   FROM {customer} c2
                    WHERE c2.c_nationkey = c.c_nationkey)
 GROUP BY c_nationkey
 """
@@ -1427,7 +1402,8 @@ QUERIES: dict[str, QuerySpec] = {
         _window_value_fns, _WINDOW_VALUE_FNS_SQL, "first/last/nth_value windows"
     ),
     "above_nation_avg": QuerySpec(
-        _above_nation_avg, _ABOVE_NATION_AVG_SQL, "correlated scalar subquery (decorrelated)"
+        _above_nation_avg, named_tables(_ABOVE_NATION_AVG_SQL),
+        "correlated scalar subquery (decorrelated)"
     ),
     "salted_agg_by_flag": QuerySpec(
         _salted_agg_by_flag, _SALTED_AGG_BY_FLAG_SQL, "skew-salted two-phase agg"
@@ -1451,7 +1427,8 @@ QUERIES: dict[str, QuerySpec] = {
         "cogroup.applyInPandas two-table per-key merge",
     ),
     "sql_shipping_priority": QuerySpec(
-        _sql_shipping_priority, _SQL_SHIPPING_PRIORITY_SQL, "spark.sql front end (TPC-H Q3 shape)"
+        _sql_shipping_priority, named_tables(_SQL_SHIPPING_PRIORITY_SQL),
+        "spark.sql front end (TPC-H Q3 shape)"
     ),
     "approx_stats": QuerySpec(_approx_stats, None, "HLL++ distinct + approx quantiles"),
     "freq_items_hh": QuerySpec(
@@ -1465,7 +1442,9 @@ QUERIES: dict[str, QuerySpec] = {
     "count_distinct_by_flag": QuerySpec(_count_distinct, _COUNT_DISTINCT_SQL, "count distinct"),
     "rollup_qty": QuerySpec(_rollup_qty, _ROLLUP_QTY_SQL, "ROLLUP + GROUPING"),
     "cube_orders": QuerySpec(_cube_orders, _CUBE_ORDERS_SQL, "CUBE + GROUPING"),
-    "grouping_sets": QuerySpec(_grouping_sets, _GROUPING_SETS_SQL, "GROUPING SETS via SQL API"),
+    "grouping_sets": QuerySpec(
+        _grouping_sets, named_tables(_GROUPING_SETS_SQL), "GROUPING SETS via SQL API"
+    ),
     "pivot_status": QuerySpec(_pivot_status, _PIVOT_STATUS_SQL, "pivot to columns"),
     "stats_by_flag": QuerySpec(_stats_by_flag, _STATS_BY_FLAG_SQL, "stddev/var/corr"),
     "moment_bit_aggs": QuerySpec(

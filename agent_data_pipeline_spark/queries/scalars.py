@@ -617,12 +617,9 @@ def _udtf_first_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, w
 
     spark.udtf.register("adps_first_words", FirstWords)
-    t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50).createOrReplaceTempView(
-        "adps_udtf_docs"
-    )
     return spark.sql(
-        "SELECT doc_id, f.pos, f.word "
-        "FROM adps_udtf_docs, LATERAL adps_first_words(text, 3) AS f"
+        "SELECT doc_id, f.pos, f.word FROM {docs}, LATERAL adps_first_words(text, 3) AS f",
+        docs=t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50),
     )
 
 

@@ -450,8 +450,7 @@ def _hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts", F.col("ts").cast("timestamp_ntz")
     )
     r = hypertable_rollup(
-        e, "ts", ["15 minutes", "1 hour", "6 hours"], ["event_type"], "value",
-        cache_levels=True,
+        e, "ts", ["15 minutes", "1 hour", "6 hours"], ["event_type"], "value"
     )
     return r.select(
         "bucket_width",
@@ -497,10 +496,8 @@ def _gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_bucket("ts", "15 minutes").alias("bucket"), "event_type"
     ).agg(rnd(F.avg("value"), 2).alias("avg_value"))
     # gap_fill reads b twice (span bounds + grid join): persist the small
-    # aggregate so the raw scan + agg runs once (tracked, ADVICE r9).
-    from ..fns import persist_dim
-
-    b = persist_dim(b, "15-min bucket × event_type aggregate")
+    # aggregate so the raw scan + agg runs once.
+    b = b.persist()
     g = locf(gap_fill(b, "bucket", "15 minutes", ["event_type"]),
              "bucket", ["event_type"], "avg_value")
     g = interpolate_linear(g, "bucket", ["event_type"], "avg_value")

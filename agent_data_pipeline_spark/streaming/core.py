@@ -22,7 +22,7 @@ Design rules for scale:
 
 from __future__ import annotations
 
-import os
+import threading
 import uuid
 from collections.abc import Callable
 
@@ -176,6 +176,11 @@ def stream_dedup(
     return df.dropDuplicates(keys)
 
 
+# Serializes the shuffle-width set/start/restore of ``stream_to_memory``:
+# two interleaved starts would otherwise restore each other's narrow width.
+_WIDTH_LOCK = threading.Lock()
+
+
 def stream_to_memory(
     df: DataFrame,
     name: str,
@@ -189,38 +194,33 @@ def stream_to_memory(
     PER BATCH, so the state partition count should track STATE VOLUME,
     not core count — the finite-replay fixtures carry <= ~4k state rows,
     where 32 stores measured 1.58 s/drain vs 0.75 s at 4 (the batch agg
-    itself is ~0.2 s). Width = max(4, cores/8), overridable with
-    $SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for production streams with
-    large state (set it to >= cores there). Safe to set-and-restore
+    itself is ~0.2 s). Width = max(4, cores/8). Safe to set-and-restore
     around ``start()``: Structured Streaming clones the session (and its
     conf) at query start — verified: restoring before the first batch
     still runs the stream at the width set here.
 
-    Concurrency caveat (ADVICE r14): the set/restore mutates the
-    SESSION-global ``spark.sql.shuffle.partitions`` for the duration of
-    ``start()``, so a query planned CONCURRENTLY on the same session in
-    that window would pick up the narrow stream width (a performance
-    nuance, never a correctness one — results are width-independent).
-    The engine's harnesses (bench, oracle differential, tests) drain
-    streams single-threaded; a multi-threaded caller should set the env
-    override to its session-wide width so set == restore.
+    The set/restore mutates the SESSION-global
+    ``spark.sql.shuffle.partitions`` for the duration of ``start()``;
+    starts are serialized by a lock so concurrent drains always restore
+    the caller's width, but a batch query planned concurrently on the
+    same session in that window picks up the narrow stream width (a
+    performance nuance, never a correctness one — results are
+    width-independent).
     """
     spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    width = int(
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", max(4, cores // 8))
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        return (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    width = max(4, spark.sparkContext.defaultParallelism // 8)
+    with _WIDTH_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        try:
+            return (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .start()
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def foreach_batch_parquet_sink(

@@ -137,7 +137,7 @@ def main() -> None:
     # gapfill_interpolate) has been the measurement semantics since
     # round 1 — releasing mid-run would shift their numbers for
     # methodology reasons, not plan reasons. End-of-run release still
-    # caps session accumulation (ADVICE r9).
+    # caps session accumulation.
     release_persists()
     load_end = host_load()
     timings = {

@@ -700,7 +700,7 @@ def _sweep(spark, names: list[str], sf_dir: str, n_passes: int = 2) -> dict[str,
             samples[name].append(time.perf_counter() - start)
     # end-of-run release (not between queries): keeps the r1-r9 warm
     # cross-pass semantics for persisting queries, still bounds session
-    # accumulation (ADVICE r9)
+    # accumulation
     release_persists()
     return {name: round(min(ts), 3) for name, ts in samples.items()}
 

@@ -82,22 +82,36 @@ def compare(spark_df, duck_df: pd.DataFrame, name: str = "query") -> None:
         )
 
 
+def _temp_views(spark) -> list[str]:
+    # temporary only: bucketed_join_agg keeps its adps_bkt_* tables on purpose
+    return sorted(tbl.name for tbl in spark.catalog.listTables() if tbl.isTemporary)
+
+
 def run_check(spark, name: str, spec, sf_dir: str) -> None:
+    """Diff the query with its oracle, sweep what it cached or
+    checkpointed (``release_persists()``), then check that it left the
+    temp views and conf as they were and no stream running. A failing
+    diff raises first."""
     from agent_data_pipeline_spark.fns import release_persists
 
+    views_before, conf_before = _temp_views(spark), spark.conf.getAll
     try:
         sdf = spec.spark(spark, sf_dir)
         if spec.oracle is None:
-            n = sdf.count()
-            assert n >= 0
-            return
-        con = duck_connection(sf_dir)
-        try:
-            ddf = con.sql(spec.oracle).fetchdf()
-        finally:
-            con.close()
-        compare(sdf, ddf, name)
+            assert sdf.count() >= 0
+        else:
+            con = duck_connection(sf_dir)
+            try:
+                ddf = con.sql(spec.oracle).fetchdf()
+            finally:
+                con.close()
+            compare(sdf, ddf, name)
     finally:
-        # release tracked dim-grain persists so a 362-query session
-        # doesn't accumulate cached frames (ADVICE r9)
+        # the result is materialized (or the check is failing): drop what
+        # the query cached or checkpointed, so a long session does not
+        # accumulate it
         release_persists()
+    views, conf = _temp_views(spark), spark.conf.getAll
+    assert views == views_before, f"{name}: temp views {views_before} -> {views}"
+    assert conf == conf_before, f"{name}: changed conf {sorted(conf.items() ^ conf_before.items())}"
+    assert not spark.streams.active, f"{name}: left {len(spark.streams.active)} streams running"

@@ -156,7 +156,7 @@ def test_hygiene_row_ops_have_no_join_or_extra_shuffle(spark):
 def test_hypertable_levels_reuse_cache(spark):
     """Coarser rollup levels must derive from the cached finer level
     (continuous-aggregate shape) — three raw scans instead of one is the
-    at-scale regression cache_levels exists to prevent."""
+    at-scale regression the level persists prevent."""
     plan = plan_of(spark, "hypertable_rollup")
     assert "InMemoryTableScan" in plan
 

@@ -54,19 +54,31 @@ def test_one_primitive_per_pattern():
     ``Observation`` (ops/observe.py — the fixpoint rounds go through
     its ``checkpoint_observed``, which owns the checkpoint-first
     ordering rule) and reading a Parquet file (io/sources.py, whose
-    footer read supplies the schema). Swept mechanically so a
-    hand-built copy cannot creep back in."""
+    footer read supplies the schema). No module registers a temp view:
+    SQL-text queries bind their frames with ``spark.sql(sql, **frames)``,
+    which names and drops the views itself. And no module keeps a
+    mutable container at module level — state that would outlive the
+    session it was made in — except the query registry, built once at
+    import. Swept mechanically so a hand-built copy cannot creep back
+    in."""
     pkg = README.parent / "agent_data_pipeline_spark"
     rules = {
         "Observation(": "ops/observe.py",
         ".observe(": "ops/observe.py",
         "spark.read.parquet(": "io/sources.py",
+        "createOrReplaceTempView(": None,
     }
+    module_container = re.compile(
+        r"^[A-Za-z_]\w*\s*(?::[^=\n]*)?=\s*(?:\[\]|\{\}|set\(\)|dict\(\)|list\(\))", re.M
+    )
     stray = []
     for src in pkg.rglob("*.py"):
         rel = src.relative_to(pkg).as_posix()
         text = src.read_text()
         for needle, home in rules.items():
             if needle in text and rel != home:
-                stray.append(f"{rel} uses {needle} (only {home} may)")
+                stray.append(f"{rel} uses {needle} (only {home or 'no module'} may)")
+        if rel != "queries/__init__.py":
+            found = module_container.finditer(text)
+            stray += [f"{rel} keeps a module-level {m.group(0)!r}" for m in found]
     assert not stray, "\n".join(stray)

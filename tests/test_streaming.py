@@ -437,11 +437,16 @@ def test_stream_cdc_dimension_maintenance(spark, tmp_path):
     assert got == {1: "a2", 3: "c", 4: "d"}
 
 
-def test_stream_queries_leave_no_views_or_queries(spark, sf_smoke):
+@pytest.mark.parametrize("workers", [1, 8])
+def test_stream_queries_leave_no_views_or_queries(spark, sf_smoke, workers):
     """Every ``stream_*`` registry query drains into a sink and returns
     a frame that stays readable, without leaving the sink's temp view
-    in the session catalog, a query running, or cached blocks held by
-    the returned frame."""
+    in the session catalog, a query running, cached blocks held by the
+    returned frame, or a conf change — also when several threads drain
+    at once (their narrow-width starts must not restore each other's
+    width)."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from agent_data_pipeline_spark.queries import REGISTRY
 
     names = [n for n in REGISTRY if n.startswith("stream_")]
@@ -449,13 +454,20 @@ def test_stream_queries_leave_no_views_or_queries(spark, sf_smoke):
     jsc = spark.sparkContext._jsc
     before = sorted(tbl.name for tbl in spark.catalog.listTables())
     rdds_before = set(jsc.getPersistentRDDs().keys())
-    frames = []  # held, so a frame's blocks cannot be cleaned up early
-    for name in names:
-        frames.append(REGISTRY[name].spark(spark, sf_smoke))
-        assert frames[-1].collect(), name
+    conf_before = spark.conf.getAll
+
+    def drain_one(name):
+        frame = REGISTRY[name].spark(spark, sf_smoke)
+        assert frame.collect(), name
+        return frame
+
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        frames = list(pool.map(drain_one, names))  # held, so no block is cleaned up early
+    assert len(frames) == len(names)
     assert sorted(tbl.name for tbl in spark.catalog.listTables()) == before
     assert spark.streams.active == []
     assert set(jsc.getPersistentRDDs().keys()) - rdds_before == set()
+    assert spark.conf.getAll == conf_before
 
 
 def test_foreachbatch_totals_leaves_no_temp_dir(spark, sf_smoke):
